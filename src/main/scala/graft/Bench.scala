@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Robust box-speed estimator (r15 verdict item 1). Round 15's close
     * artifact normalized with `min(before, after)` over SINGLE samples
@@ -33,14 +32,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
     // Warmup at the smallest sf: every query's whole-stage codegen, custom
     // Expressions, broadcast machinery, and parquet reader paths get
     // JIT/Janino-compiled ONCE here, so the timed loop below measures data
@@ -49,17 +42,9 @@ object Bench {
       "/root/testdata/sf0.001")
     // Optional comma-separated subset (dev loop: time one query without the
     // full sweep). Unset/empty = all queries, the driver contract.
-    val only = sys.env.getOrElse("SPARK_GRAFT_ONLY", "").split(",")
-      .map(_.trim).filter(_.nonEmpty).toSet
-    // A stale/typoed name in the filter must not silently shrink the run:
-    // the subset JSON would be indistinguishable from a full sweep except
-    // by its query set, and the headline total would look like a perf win.
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) System.err.println(
-      s"[bench] WARNING: SPARK_GRAFT_ONLY names match no query: " +
-        unknown.toSeq.sorted.mkString(","))
+    val only = LocalSession.onlyKeys("bench", SparkEntry.queries.keySet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only.contains(n) }
+      .filter { case (n, _) => only.forall(_.contains(n)) }
     if (warmDir.nonEmpty && new java.io.File(warmDir).isDirectory) {
       selected.foreach { case (name, fn) =>
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
@@ -95,7 +80,7 @@ object Bench {
       val t0 = System.nanoTime()
       // bit_xor, not sum: the session runs ANSI mode and summing 8e9
       // xxhash64 longs overflows; xor is closed over Long
-      spark.range(0L, 8000000000L, 1L, cpus.toInt)
+      spark.range(0L, 8000000000L, 1L, cpus)
         .selectExpr("xxhash64(id, 42) AS h")
         .selectExpr("bit_xor(h) AS s")
         .write.format("noop").mode("overwrite").save()
@@ -161,7 +146,7 @@ object Bench {
     val CalibShuffleRef = 2.20 // seconds (min), round-17-close box
     def calibShufflePass(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 50000000L, 1L, cpus.toInt)
+      spark.range(0L, 50000000L, 1L, cpus)
         .selectExpr("id % 2000000 AS k", "xxhash64(id, 7) AS v")
         .groupBy("k")
         .agg(org.apache.spark.sql.functions.expr("bit_xor(v) AS x"))
@@ -278,7 +263,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val total = results.values.flatten.sum
     val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val subset = if (only.nonEmpty) "\"subset\":true," else ""
+    val subset = if (only.isDefined) "\"subset\":true," else ""
     // Self-diagnosing artifact: stall_suspect now lists only the keys
     // that STILL lack two agreeing timings after the bounded retry
     // loop — a reader comparing rounds discounts exactly these (in a
@@ -314,17 +299,12 @@ object Bench {
     val line =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",$calibJson$subset"queries":$qs,"failed":$failedJson,"stall_suspect":$suspectJson,"declared_baselines":$baselineJson,"sf":"$sfDir"}"""
     println(line)
-    // Truncation-proof SECOND summary line (round 18, r17 verdict item
-    // 2): the driver captures only a bounded TAIL of stdout, and the
-    // full one-line JSON above has outgrown that window in 3 of the
-    // last 4 rounds (BENCH_r14/15/16 all carry parsed:null because the
-    // line's HEAD — where the headline total lives — fell outside the
-    // tail). This short line repeats the headline fields in well under
-    // 200 bytes AFTER the full line, so whatever window the driver
-    // keeps always contains a complete, parseable total. Additive
-    // only: the full line, its field set, and the timing methodology
-    // are unchanged.
-    println(s"""{"metric":"total_summary","value":${r3(total)},"unit":"sec","n_keys":${results.size},"n_failed":${failed.size},"value_normalized":$normJson,"calib_sec":${r3(calibSec)},"calib_shuffle_sec":${r3(calibShufSec)},"sf":"$sfDir"}""")
+    // Short summary of the headline fields, on STDERR: consumers parse
+    // the LAST stdout line, which must stay the full line above with its
+    // per-key `queries` map (a trailing summary on stdout hid that map
+    // from per-query comparisons). The full line is also persisted to
+    // bench_last.json below, in case a stdout tail truncates it.
+    System.err.println(s"""{"metric":"total_summary","value":${r3(total)},"unit":"sec","n_keys":${results.size},"n_failed":${failed.size},"value_normalized":$normJson,"calib_sec":${r3(calibSec)},"calib_shuffle_sec":${r3(calibShufSec)},"sf":"$sfDir"}""")
     // The driver captures a bounded TAIL of stdout; with ~100 queries the
     // line's head (the headline total) can fall outside that window. The
     // same line is persisted so the round artifact / future rounds carry

@@ -40,15 +40,7 @@ object Fuzz {
     val outDir = args.lift(1).getOrElse("/tmp/fuzz_out")
     val n = args.lift(2).map(_.toInt).getOrElse(200)
     val seed = args.lift(3).map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder().master("local[8]")
-      // the distinct-window fuzz arm (round 16) exercises
-      // RollingDistinctRewrite, which installs at build time only
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     new java.io.File(inDir).mkdirs()
     new java.io.File(outDir).mkdirs()
 

@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
 /** Round-deliverable plan dumper: writes `<outDir>/<key>_<suffix>.txt`
   * with the formatted physical plan of each named key — the
   * before/after evidence files the optimization rounds commit under
-  * `plans/rNN/`. Session confs mirror graft.Plans (local[4], 4 shuffle
-  * partitions) so shapes match the committed ledger and the r17 dumps.
+  * `plans/rNN/`. Runs on `LocalSession(4)`, as graft.Plans does, so
+  * shapes match the committed ledger and the r17 dumps.
   *
   * usage: runMain graft.PlanDump <outDir> <suffix> <key>[,key...] [sfDir]
   */
@@ -27,12 +26,7 @@ object PlanDump {
       System.err.println(s"unknown keys: ${unknown.mkString(",")}")
       sys.exit(2)
     }
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
     Files.createDirectories(Paths.get(outDir))
     keys.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)

@@ -1,25 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates PLAN_FINGERPRINTS.json — the committed plan-shape ledger
   * PlanFingerprintSpec gates on (see [[graft.plans.PlanFingerprint]]).
   * Run after an INTENTIONAL plan change; the diff is the review
-  * artifact. Session confs mirror SparkTestSession exactly (4 cores /
-  * 4 shuffle partitions) so the spec recomputes identical shapes. */
+  * artifact. Runs on the same `LocalSession(4)` as SparkTestSession so
+  * the spec recomputes identical shapes. */
 object PlanFingerprints {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLAN_FINGERPRINTS.json")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
     val entries =
       (Plans.fingerprinted.map { name =>
         name -> graft.plans.PlanFingerprint.of(

@@ -301,15 +301,7 @@ object Sf10Probe {
     graft.functions.FrameDigest.of(df)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
     // dir is tag-suffixed so a stale fixture built with an older tag
     // (its _READY gate would skip the rebuild) can never be probed
@@ -331,8 +323,7 @@ object Sf10Probe {
     val maxUser = graft.queries.QueryUtil.events(spark, sf1)
       .agg(max(col("user_id"))).head.getLong(0)
 
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = LocalSession.onlyKeys("sf10probe", Arms.map(_.name))
     val probe = only.fold(Arms) { o => Arms.filter(a => o(a.name)) }
 
     // warmup (codegen/JIT) at the smallest sf, like Bench/Sf1Probe

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Materializes the sf1 fixture (Sf1Probe's 10× key-shifted scaling of
   * sf0.1) WITHOUT running the timing probe — the entry point the sf1
   * CORRECTNESS sweep uses: `runMain graft.Sf1Build [dstDir]`, then
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Sf1Build {
   def main(args: Array[String]): Unit = {
     val dst = args.headOption.getOrElse("/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     Sf1Probe.buildSf1(spark, "/root/testdata/sf0.1", dst)
     System.err.println(s"[sf1build] fixture ready at $dst")
     spark.stop()

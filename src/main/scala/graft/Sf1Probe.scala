@@ -197,14 +197,7 @@ object Sf1Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
     System.err.println("[sf1probe] building sf1 fixture (10x sf0.1)...")
@@ -212,8 +205,7 @@ object Sf1Probe {
 
     // single-key refresh after a rewrite: probe only the listed keys and
     // MERGE into the existing SF1PROBE.json (other keys' code unchanged)
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = LocalSession.onlyKeys("sf1probe", Keys)
     val probeKeys = only.fold(Keys)(o => Keys.filter(o))
 
     // warmup (codegen/JIT) at the smallest sf, like Bench

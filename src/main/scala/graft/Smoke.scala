@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Mimics the driver's t1 smoke: a fresh default session (none of our
-  * confs preset) calling SparkEntry.entry, checking rows > 0. */
+/** Smoke check of the library entry point: a fresh session calling
+  * SparkEntry.entry, checking rows > 0. Shuffle partitions go back to
+  * Spark's default so none of the harness sizing is preset. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(4)
+    spark.conf.unset("spark.sql.shuffle.partitions")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -62,12 +62,7 @@ object StreamCorrectness {
   def main(args: Array[String]): Unit = {
     val perKey = args.headOption.map(_.toInt).getOrElse(2000)
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     import spark.implicits._
 
     val lateness = StreamProbe.lateness

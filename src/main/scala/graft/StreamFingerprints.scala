@@ -1,26 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates STREAM_FINGERPRINTS.json — the committed streaming
   * TOPOLOGY ledger StreamTopologySpec gates on (the streaming twin of
   * [[PlanFingerprints]]; see [[graft.plans.StreamTopology]]). Run
   * after an INTENTIONAL streaming-shape change; the diff is the
-  * review artifact. Session confs mirror SparkTestSession (4 cores /
-  * 4 shuffle partitions) so the spec recomputes identical shapes. */
+  * review artifact. Runs on the same `LocalSession(4)` as
+  * SparkTestSession so the spec recomputes identical shapes. */
 object StreamFingerprints {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("STREAM_FINGERPRINTS.json")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
     val keys = graft.queries.TimeSeriesQueries.streamingKeys.toSeq.sorted
     val entries = keys.map { name =>
       val fp = graft.plans.StreamTopology.fingerprint(spark, name, sfDir)

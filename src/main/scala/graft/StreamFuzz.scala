@@ -61,14 +61,10 @@ object StreamFuzz {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(200)
     val seed = args.lift(1).map(_.toLong).getOrElse(42L)
-    val spark = SparkSession.builder().master("local[8]")
-      // the stream-scoped state-store sizing the gate keys use; tiny
-      // per-sample data makes 2 the latency-optimal setting here
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
+    // the stream-scoped state-store sizing the gate keys use; tiny
+    // per-sample data makes 2 the latency-optimal setting here
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
 
     var fails = List.empty[String]
     val armCounts = scala.collection.mutable.Map.empty[String, Int]

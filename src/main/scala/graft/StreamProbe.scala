@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.StreamingOps
@@ -151,12 +151,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val perKeyX1 = args.headOption.map(_.toInt).getOrElse(2000)
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
 
     def run[I <: Product : org.apache.spark.sql.Encoder](
         batches: Seq[Seq[I]],

@@ -1,32 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_ONLY=k1,k2 restricts the dump (and the oracle
     // json) to those keys; the driver never sets it, so its gate sees all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typoed name must not silently shrink the dev loop to a no-op
-    // "everything matches" (Bench has the same warning for the same
-    // reason)
-    only.map(_ -- SparkEntry.queries.keySet).filter(_.nonEmpty)
-      .foreach(u => System.err.println(
-        s"[verify] WARNING: SPARK_GRAFT_ONLY names match no query: " +
-          u.toSeq.sorted.mkString(",")))
+    val only = LocalSession.onlyKeys("verify", SparkEntry.queries.keySet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name))

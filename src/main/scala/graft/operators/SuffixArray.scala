@@ -68,22 +68,6 @@ object SuffixArray {
   private val CNT = "__sa_cnt__"
   private val CUM = "__sa_cum__"; private val RNK = "__sa_r__"
 
-  /** Pass-timing trace to stderr (`spark.graft.sa.debugTiming`, default
-    * off) — the operator is sequential-pass latency-bound, so per-pass
-    * timing is the profile that matters. */
-  private def traced[T](df: DataFrame, tag: String)(f: => T): T = {
-    val on = df.sparkSession.conf
-      .getOption("spark.graft.sa.debugTiming").contains("true")
-    if (!on) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      Console.err.println(
-        f"[sa] $tag: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
-
   /** Global rank() (1-based, ties share the minimum row number) of the
     * rows of `df` under the lexicographic ascending order of `keyCols`,
     * computed over the DISTINCT-KEY table (orders smaller than the
@@ -123,8 +107,7 @@ object SuffixArray {
     val keys = df.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as(CNT)).persist()
     cleanup += keys
-    val st = traced(df, s"rankPass[${keyCols.size}] keys+stats")(
-      keys.agg(count(lit(1)).as("n"), max(col(CNT)).as("t")).head())
+    val st = keys.agg(count(lit(1)).as("n"), max(col(CNT)).as("t")).head()
     val (nKeys, maxTie) = (st.getLong(0), st.getLong(1))
     val ranked =
       if (nKeys <= bcastMax) {
@@ -166,11 +149,10 @@ object SuffixArray {
     // byte order — both guaranteed in ASCII, neither beyond it).
     // Non-conforming corpora fail LOUDLY with the normalization hint
     // instead of producing subtly reordered ranks.
-    val stats = traced(docs, "maxTok scan")(
-      docs.where(length(col(textCol)) > 0)
-        .agg(max(size(split(col(textCol), " "))),
-          sum(when(col(textCol).rlike("\\A |  | \\z|[^ -~]"), 1L)
-            .otherwise(0L))).head())
+    val stats = docs.where(length(col(textCol)) > 0)
+      .agg(max(size(split(col(textCol), " "))),
+        sum(when(col(textCol).rlike("\\A |  | \\z|[^ -~]"), 1L)
+          .otherwise(0L))).head()
     if (stats.isNullAt(0)) // empty corpus: typed empty frame
       return docs.sparkSession.range(0).select(col("id").as("doc_id"),
         col("id").as("pos"), col("id").as("sa_rank"))
@@ -233,9 +215,8 @@ object SuffixArray {
     // ONE eager materialization for the whole pipeline: truncates the
     // iterated lineage for downstream consumers (repeatSpans scans the
     // result twice) and lets every per-pass cache go.
-    val out = traced(toks, "final+ckpt")(
-      fin.select(col("doc_id"), col("pos"), col("sa_rank"))
-        .localCheckpoint(true))
+    val out = fin.select(col("doc_id"), col("pos"), col("sa_rank"))
+      .localCheckpoint(true)
     cleanup.foreach(_.unpersist())
     out
   }

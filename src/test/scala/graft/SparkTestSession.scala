@@ -4,18 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (sbt forks a single test JVM). */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[4]")
-      .appName("tidierspark-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val get: SparkSession = LocalSession(4)
 }
