@@ -64,10 +64,6 @@ object GlobalWindow {
   private val PID = "__gw_pid__"
   private val OPID = "__gw_opid__" // offset-side alias of PID (join clarity)
   private val KEY = "__gw_key__"
-  private val LOC = "__gw_loc__"
-  private val CNT = "__gw_cnt__"
-  private val OFF = "__gw_off__"
-  private val OFFCNT = "__gw_offcnt__"
 
   /** Range-split count ceiling: the pid when-tree materializes one node
     * per split, so splits track shuffle partitions only up to a bound
@@ -149,35 +145,27 @@ object GlobalWindow {
       valueCol: String, outCol: String, agg: RunningAgg,
       numPartitions: Int = 0): DataFrame =
     sweepAndJoin(stampPid(df, orderBy, numPartitions), by, orderBy,
-      valueCol, outCol, agg)
+      Seq((agg, valueCol, outCol)))
 
-  /** MULTI-PAYLOAD sibling of [[groupedCumSumLong]] (round 17,
-    * optimization): N independent running Long sums in the SAME total
-    * order share ONE pid stamp (one sampling job), ONE local sweep
-    * window, ONE offset aggregate and ONE broadcast join. The
-    * dual-aggregate distinct lowerings previously folded the
-    * single-payload form once per payload — each fold re-paying the
-    * driver-side bounds sampling and a full (group, pid) window +
-    * offset-join pass over the frame. Per-payload NULL gating matches
-    * N sequential [[groupedCumSumLong]] calls exactly: each payload
-    * gates on its OWN running non-null count, so "no values yet" stays
-    * NULL per payload. Each `(in, out)` payload must be LongType (or
-    * null) — same int64-exact contract as [[RunningAgg.SumLong]]. */
+  /** MULTI-PAYLOAD sibling of [[groupedCumSumLong]]: N independent
+    * running Long sums in the SAME total order share ONE pid stamp (one
+    * sampling job), ONE local sweep window, ONE offset aggregate and ONE
+    * broadcast join — N payloads cost N extra aggregate buffers in the
+    * same passes, not N-1 extra passes. Each payload gates on its OWN
+    * running non-null count, so the result equals N sequential
+    * [[groupedCumSumLong]] calls exactly ("no values yet" stays NULL per
+    * payload). Each `(in, out)` payload must be LongType (or null) —
+    * same int64-exact contract as [[RunningAgg.SumLong]]. */
   def groupedCumSumsLong(df: DataFrame, by: Seq[String],
       orderBy: Seq[Column], payloads: Seq[(String, String)],
       numPartitions: Int = 0): DataFrame = {
     require(payloads.nonEmpty, "groupedCumSumsLong needs >= 1 payload")
-    if (payloads.size == 1)
-      groupedCumSumLong(df, by, orderBy, payloads.head._1,
-        payloads.head._2, numPartitions)
-    else
-      multiSweepAndJoin(stampPid(df, orderBy, numPartitions), by,
-        orderBy, payloads)
+    sweepAndJoin(stampPid(df, orderBy, numPartitions), by, orderBy,
+      payloads.map { case (in, out) => (RunningAgg.SumLong, in, out) })
   }
 
-  /** Stamp the literal-bounds range pid (shared by the single- and
-    * multi-payload scaffolds — the construction notes live on
-    * [[groupedCumAgg]]'s original body). */
+  /** Stamp the literal-bounds range pid (the construction notes are in
+    * the object's scaladoc). */
   private def stampPid(df: DataFrame, orderBy: Seq[Column],
       numPartitions: Int): DataFrame = {
     val parts = math.min(MaxSplits,
@@ -212,19 +200,44 @@ object GlobalWindow {
     }
   }
 
-  /** The shared two-pass scaffold over a pid-stamped frame: local sweep,
-    * per-(group, pid) totals, per-group exclusive prefix, broadcast join
-    * back. Group keys join NULL-SAFELY (`<=>`): `Window.partitionBy`
+  /** The two-pass scaffold over a pid-stamped frame, for N payloads
+    * `(kind, in, out)` in one total order: local sweep, per-(group, pid)
+    * totals, per-group exclusive prefix, broadcast join back — every
+    * payload rides the same window, aggregate and join as one more
+    * buffer. Group keys join NULL-SAFELY (`<=>`): `Window.partitionBy`
     * treats a NULL group as a real group, and a null-unsafe join would
     * silently null out that whole group's output. */
   private def sweepAndJoin(ranged: DataFrame, by: Seq[String],
-      orderBy: Seq[Column], valueCol: String, outCol: String,
-      agg: RunningAgg): DataFrame = {
+      orderBy: Seq[Column],
+      payloads: Seq[(RunningAgg, String, String)]): DataFrame = {
     import RunningAgg._
     val byCols = by.map(col)
-    val v = () => col(valueCol)
-    val SUM = "__gw_psum__"; val MIN = "__gw_pmin__"; val MAX = "__gw_pmax__"
-    val OFFMIN = "__gw_offmin__"; val OFFMAX = "__gw_offmax__"
+    def CNT(i: Int) = s"__gw_cnt_${i}__"
+    def LOC(i: Int) = s"__gw_loc_${i}__"
+    def PCNT(i: Int) = s"__gw_pcnt_${i}__"
+    def PART(i: Int) = s"__gw_part_${i}__"
+    def OFFCNT(i: Int) = s"__gw_offcnt_${i}__"
+    def OFF(i: Int) = s"__gw_off_${i}__"
+    // the kernel each kind folds with — locally, per (group, pid), and
+    // across preceding pids. Sum/Avg run in double; SumLong has NO double
+    // cast anywhere — int64 partials/offsets/combine keep magnitudes past
+    // 2^53 exact (ANSI makes true overflow loud). Count needs no kernel:
+    // the running count below is its value.
+    def merge(agg: RunningAgg, c: Column): Column = agg match {
+      case Min => min(c)
+      case Max => max(c)
+      case _   => sum(c)
+    }
+    def value(agg: RunningAgg, in: String): Column =
+      if (agg == Sum || agg == Avg) col(in).cast(DoubleType) else col(in)
+    // sums fold "nothing" to their zero; min/max keep NULL, which
+    // least/greatest skip
+    def orZero(agg: RunningAgg, c: Column): Column = agg match {
+      case Sum | Avg => coalesce(c, lit(0.0))
+      case SumLong   => coalesce(c, lit(0L))
+      case _         => c
+    }
+    val indexed = payloads.zipWithIndex
 
     // Pass 1: per-(group, range) running partials. The running non-null
     // count is always computed: it distinguishes "sum is 0" from "no
@@ -232,18 +245,11 @@ object GlobalWindow {
     // value; count itself is the one aggregate that starts at 0).
     val lw = Window.partitionBy((byCols :+ col(PID)): _*).orderBy(orderBy: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val needSum = agg == Sum || agg == Avg
-    val needSumL = agg == SumLong
-    val needMin = agg == Min
-    val needMax = agg == Max
-    var swept = ranged.withColumn(CNT, count(v()).over(lw))
-    if (needSum) swept =
-      swept.withColumn(LOC, sum(v().cast(DoubleType)).over(lw))
-    // SumLong: NO double cast anywhere — int64 partials/offsets/combine
-    // keep magnitudes past 2^53 exact (ANSI makes true overflow loud)
-    if (needSumL) swept = swept.withColumn(LOC, sum(v()).over(lw))
-    if (needMin) swept = swept.withColumn(LOC, min(v()).over(lw))
-    if (needMax) swept = swept.withColumn(LOC, max(v()).over(lw))
+    val swept = indexed.foldLeft(ranged) { case (acc, ((agg, in, _), i)) =>
+      val counted = acc.withColumn(CNT(i), count(col(in)).over(lw))
+      if (agg == Count) counted
+      else counted.withColumn(LOC(i), merge(agg, value(agg, in)).over(lw))
+    }
 
     // Pass 2: one total per (group, pid) (map-side partial agg → G×P
     // rows), exclusive prefix-fold per group over its P rows (a window
@@ -253,116 +259,55 @@ object GlobalWindow {
     val pw = Window.partitionBy(byCols: _*).orderBy(col(PID))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offBy = by.map(b => s"__gw_by_$b")
-    val partials = Seq(count(v()).as("pcnt")) ++
-      (if (needSum) Seq(coalesce(sum(v().cast(DoubleType)), lit(0.0)).as(SUM))
-       else Nil) ++
-      (if (needSumL) Seq(coalesce(sum(v()), lit(0L)).as(SUM)) else Nil) ++
-      (if (needMin) Seq(min(v()).as(MIN)) else Nil) ++
-      (if (needMax) Seq(max(v()).as(MAX)) else Nil)
-    var offsetDf = ranged.groupBy((byCols :+ col(PID)): _*)
-      .agg(partials.head, partials.tail: _*)
-      .withColumn(OFFCNT, coalesce(sum(col("pcnt")).over(pw), lit(0L)))
-    if (needSum) offsetDf =
-      offsetDf.withColumn(OFF, coalesce(sum(col(SUM)).over(pw), lit(0.0)))
-    if (needSumL) offsetDf =
-      offsetDf.withColumn(OFF, coalesce(sum(col(SUM)).over(pw), lit(0L)))
-    if (needMin) offsetDf = offsetDf.withColumn(OFFMIN, min(col(MIN)).over(pw))
-    if (needMax) offsetDf = offsetDf.withColumn(OFFMAX, max(col(MAX)).over(pw))
+    val partials = indexed.flatMap { case ((agg, in, _), i) =>
+      count(col(in)).as(PCNT(i)) +: (if (agg == Count) Nil
+        else Seq(orZero(agg, merge(agg, value(agg, in))).as(PART(i))))
+    }
+    val withOffsets = indexed.foldLeft(
+        ranged.groupBy((byCols :+ col(PID)): _*)
+          .agg(partials.head, partials.tail: _*)) {
+      case (acc, ((agg, _, _), i)) =>
+        val counted = acc.withColumn(OFFCNT(i),
+          coalesce(sum(col(PCNT(i))).over(pw), lit(0L)))
+        if (agg == Count) counted
+        else counted.withColumn(OFF(i),
+          orZero(agg, merge(agg, col(PART(i))).over(pw)))
+    }
     // The offset side's pid is RENAMED (like the `__gw_by_` group keys):
     // both frames share lineage, and a `swept(PID) === offsetDf(PID)`
     // condition is exactly the self-join ambiguity class Spark resolves
     // heuristically (it logged "trivially true equals predicate" warnings)
     // — two distinct attribute names make the equi-join unambiguous under
     // any plan rewrite.
-    val offOut = Seq(col(PID).as(OPID), col(OFFCNT)) ++
-      (if (needSum || needSumL) Seq(col(OFF)) else Nil) ++
-      (if (needMin) Seq(col(OFFMIN)) else Nil) ++
-      (if (needMax) Seq(col(OFFMAX)) else Nil)
-    offsetDf = offsetDf.select(
+    val offOut = col(PID).as(OPID) +: indexed.flatMap {
+      case ((agg, _, _), i) =>
+        col(OFFCNT(i)) +: (if (agg == Count) Nil else Seq(col(OFF(i))))
+    }
+    val offsetDf = withOffsets.select(
       (by.zip(offBy).map { case (b, o) => col(b).as(o) } ++ offOut): _*)
 
     // Combine: local ⊕ offset. least/greatest skip NULLs, which is
     // exactly "no values yet on that side"; the count gate preserves the
     // NULL-until-first-value window contract for everything except
     // Count, which genuinely starts at 0.
-    val combined: Column = agg match {
-      case Sum   => when(col(CNT) + col(OFFCNT) > 0,
-        coalesce(col(LOC), lit(0.0)) + col(OFF))
-      case SumLong => when(col(CNT) + col(OFFCNT) > 0,
-        coalesce(col(LOC), lit(0L)) + col(OFF))
-      case Avg   => when(col(CNT) + col(OFFCNT) > 0,
-        (coalesce(col(LOC), lit(0.0)) + col(OFF)) / (col(CNT) + col(OFFCNT)))
-      case Count => col(CNT) + col(OFFCNT)
-      case Min   => least(col(LOC), col(OFFMIN))
-      case Max   => greatest(col(LOC), col(OFFMAX))
+    def combined(agg: RunningAgg, i: Int): Column = {
+      val n = col(CNT(i)) + col(OFFCNT(i))
+      val total = orZero(agg, col(LOC(i))) + col(OFF(i))
+      agg match {
+        case Sum | SumLong => when(n > 0, total)
+        case Avg   => when(n > 0, total / n)
+        case Count => n
+        case Min   => least(col(LOC(i)), col(OFF(i)))
+        case Max   => greatest(col(LOC(i)), col(OFF(i)))
+      }
     }
     val joinCond = (by.zip(offBy).map { case (b, o) => col(b) <=> col(o) } :+
       (col(PID) === col(OPID))).reduce(_ && _)
-    swept.join(broadcast(offsetDf), joinCond, "left")
-      .withColumn(outCol, combined)
-      .drop((offBy :+ PID :+ OPID) :+ LOC: _*)
-      .drop(CNT, OFF, OFFCNT, SUM, MIN, MAX, OFFMIN, OFFMAX)
-  }
-
-  /** The multi-payload SumLong scaffold: identical two-pass structure
-    * to [[sweepAndJoin]], with per-payload (running count, running sum,
-    * partial count, partial sum, offset count, offset sum) columns all
-    * riding the SAME (group, pid) window / aggregate / broadcast join.
-    * Window aggregates over one spec share one WindowExec, so N
-    * payloads cost N extra buffers in the existing passes rather than
-    * N-1 extra passes. */
-  private def multiSweepAndJoin(ranged: DataFrame, by: Seq[String],
-      orderBy: Seq[Column],
-      payloads: Seq[(String, String)]): DataFrame = {
-    val byCols = by.map(col)
-    def CNTi(i: Int) = s"__gw_cnt_${i}__"
-    def LOCi(i: Int) = s"__gw_loc_${i}__"
-    def PCNTi(i: Int) = s"__gw_pcnt_${i}__"
-    def SUMi(i: Int) = s"__gw_psum_${i}__"
-    def OFFCNTi(i: Int) = s"__gw_offcnt_${i}__"
-    def OFFi(i: Int) = s"__gw_off_${i}__"
-
-    val lw = Window.partitionBy((byCols :+ col(PID)): _*)
-      .orderBy(orderBy: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val swept = payloads.zipWithIndex.foldLeft(ranged) {
-      case (acc, ((in, _), i)) =>
-        // int64 end to end — no double cast (the SumLong contract)
-        acc.withColumn(CNTi(i), count(col(in)).over(lw))
-          .withColumn(LOCi(i), sum(col(in)).over(lw))
-    }
-
-    val pw = Window.partitionBy(byCols: _*).orderBy(col(PID))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val partials = payloads.zipWithIndex.flatMap { case ((in, _), i) =>
-      Seq(count(col(in)).as(PCNTi(i)),
-        coalesce(sum(col(in)), lit(0L)).as(SUMi(i)))
-    }
-    val offBy = by.map(b => s"__gw_by_$b")
-    val withOffsets = payloads.indices.foldLeft(
-      ranged.groupBy((byCols :+ col(PID)): _*)
-        .agg(partials.head, partials.tail: _*)) { (acc, i) =>
-      acc.withColumn(OFFCNTi(i),
-          coalesce(sum(col(PCNTi(i))).over(pw), lit(0L)))
-        .withColumn(OFFi(i), coalesce(sum(col(SUMi(i))).over(pw), lit(0L)))
-    }
-    val offOut = Seq(col(PID).as(OPID)) ++
-      payloads.indices.flatMap(i => Seq(col(OFFCNTi(i)), col(OFFi(i))))
-    val offsetDf = withOffsets.select(
-      (by.zip(offBy).map { case (b, o) => col(b).as(o) } ++ offOut): _*)
-
-    val joinCond = (by.zip(offBy).map { case (b, o) => col(b) <=> col(o) } :+
-      (col(PID) === col(OPID))).reduce(_ && _)
-    val combined = payloads.zipWithIndex.foldLeft(
-      swept.join(broadcast(offsetDf), joinCond, "left")) {
-      case (acc, ((_, out), i)) =>
-        acc.withColumn(out, when(col(CNTi(i)) + col(OFFCNTi(i)) > 0,
-          coalesce(col(LOCi(i)), lit(0L)) + col(OFFi(i))))
-    }
-    combined
-      .drop((offBy :+ PID :+ OPID): _*)
-      .drop(payloads.indices.flatMap(i =>
-        Seq(CNTi(i), LOCi(i), PCNTi(i), SUMi(i), OFFCNTi(i), OFFi(i))): _*)
+    indexed.foldLeft(
+        swept.join(broadcast(offsetDf), joinCond, "left")) {
+      case (acc, ((agg, _, out), i)) => acc.withColumn(out, combined(agg, i))
+    }.drop((offBy :+ PID :+ OPID) ++ payloads.indices.flatMap(i =>
+      Seq(CNT(i), LOC(i), PCNT(i), PART(i), OFFCNT(i), OFF(i))): _*)
   }
 
   /** Sampled-bounds memo, keyed by (semantic hash of the keys-only

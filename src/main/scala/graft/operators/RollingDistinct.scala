@@ -24,10 +24,12 @@ import org.apache.spark.sql.functions._
   *   4. sum deltas per bucket (hash aggregate), then a running sum in
   *      bucket order is the exact distinct count at every bucket.
   *
-  * The running sum runs over the BUCKET DOMAIN (one row per bucket with
-  * any delta), whose size is data-independent — days of history, not
-  * rows — and rides [[GlobalWindow.cumSum]] so even a second-granular
-  * domain (~31M buckets/year) needs no single-partition sort.
+  * The running sum runs over the BUCKET DOMAIN (one row per spine or
+  * delta bucket), whose size follows the buckets — days of history, not
+  * rows — and rides [[GlobalWindow.groupedCumSumsLong]] so even a
+  * second-granular domain (~31M buckets/year) needs no single-partition
+  * sort. Every form shares one lowering: a spine of the buckets to
+  * report, merged with the raw delta rows, then one running pass.
   *
   * Everything is exact: no sketch, no sampling. For approximate distinct
   * at much lower cost see the HLL path in `agg_approx`.
@@ -44,18 +46,9 @@ object RollingDistinct {
     * years of second-granular buckets, ~270k years of days) and raises
     * immediately with a quantize-first hint on pathological domains.
     * The subtraction itself is ANSI-checked: span overflow (hi−lo past
-    * int64) also fails loudly rather than wrapping.
-    *
-    * Round 17: the guard now protects ONLY direct callers of the
-    * dense-output operator forms (`dense = true`, the default — the
-    * "one row per bucket in span, quiet buckets included" contract).
-    * [[graft.plans.RollingDistinctRewrite]] lowers every claimed query
-    * through the SPARSE observed-bucket plan, which materializes no
-    * sequence at all — spine cost scales with DATA, never with domain
-    * span — so the guard is unreachable from the rewrite and the
-    * r16-ADVICE hazard (a frame offset widening the span past the cap
-    * with a misleading quantize hint) no longer exists: no rewrite
-    * plan, offset or not, touches this code path. */
+    * int64) also fails loudly rather than wrapping. Observed spines
+    * (what [[graft.plans.RollingDistinctRewrite]] uses) materialize no
+    * sequence and never reach this guard. */
   private def guardedHi(df: DataFrame): Column = {
     val cap = df.sparkSession.conf.get(
       "spark.graft.rollingDistinct.maxBucketSpan", "100000000").toLong
@@ -67,7 +60,7 @@ object RollingDistinct {
         col("__hi") - col("__lo"))).cast("long"))
   }
 
-  /** Sum carrier for the dual-aggregate lowerings (round 16): distinct
+  /** Sum carrier of `v` (a column holding `valueCol`'s values): distinct
     * values are compared RAW — any atomic type, and since the
     * multi-argument COUNT(DISTINCT a, b) widening also STRUCTS — but
     * `try_cast(x AS BIGINT)` is an ANALYSIS error (not a runtime null)
@@ -75,81 +68,56 @@ object RollingDistinct {
     * carrier becomes a null literal for any type bigint cannot be
     * try_cast from. Callers only read the sum for integral-eligible
     * SUM/AVG targets, where the cast is the identity. */
-  private def sumCastable(df: DataFrame, valueCol: String): Boolean =
-    df.schema.find(_.name == valueCol).map(_.dataType).exists {
-      case _: org.apache.spark.sql.types.NumericType => true
-      case org.apache.spark.sql.types.StringType     => true
-      case org.apache.spark.sql.types.BooleanType    => true
-      case _                                         => false
+  private def sumCarrier(df: DataFrame, valueCol: String, v: Column): Column =
+    df.schema.find(_.name == valueCol).map(_.dataType) match {
+      case Some(_: org.apache.spark.sql.types.NumericType) |
+          Some(org.apache.spark.sql.types.StringType) |
+          Some(org.apache.spark.sql.types.BooleanType) => v.try_cast("bigint")
+      case _ => lit(null).cast("bigint")
     }
 
-
-  /** LEFT join `spine ⋈ deltas` on (group keys, "__d") with NULL-SAFE
-    * group-key equality (round 16 — caught by the distinct-window fuzz
-    * arm on its first run): a NULL partition key is ONE real group in
-    * window semantics (both Spark's WindowExec and DuckDB evaluate
-    * frames inside it, and `groupBy`/`Window.partitionBy` upstream
-    * treat it so), but the previous USING-join's plain equality
-    * silently dropped the null group's deltas, zeroing every count in
-    * that group. Output: spine group columns + "__d" + the delta
-    * payload columns (null where unmatched — callers coalesce). */
-  private def joinSpineDeltas(spine: DataFrame, deltas: DataFrame,
-      by: Seq[String], payload: Seq[String]): DataFrame = {
-    val sp = spine.alias("__sp")
-    val dl = deltas.alias("__dl")
-    val cond = (by.map(c => col(s"__sp.`$c`") <=> col(s"__dl.`$c`")) :+
-      (col("__sp.__d") === col("__dl.__d"))).reduce(_ && _)
-    sp.join(dl, cond, "left")
-      .select(by.map(c => col(s"__sp.`$c`").as(c)) ++
-        Seq(col("__sp.__d").as("__d")) ++
-        payload.map(c => col(s"__dl.`$c`").as(c)): _*)
+  /** The buckets a lowering reports, one (group, "__d") row each. An
+    * OBSERVED spine (`dense = false`) is the distinct buckets of `src`,
+    * so its cost scales with data, never with domain span. A DENSE spine
+    * is every bucket of each group's [min, max] span — quiet buckets
+    * included — via `sequence(lo, hi)`, capped by [[guardedHi]]. Null
+    * buckets never enter either spine. */
+  private def spine(src: DataFrame, by: Seq[String], bucket: Column,
+      dense: Boolean): DataFrame = {
+    val byCols = by.map(col)
+    val b = src.select(byCols :+ bucket.as("__d"): _*)
+      .filter(col("__d").isNotNull)
+    if (dense) b.groupBy(byCols: _*)
+      .agg(min(col("__d")).as("__lo"), max(col("__d")).as("__hi"))
+      .select(byCols :+ explode(sequence(col("__lo"), guardedHi(src)))
+        .as("__d"): _*)
+    else b.distinct()
   }
 
-  /** SPARSE-SPINE merge (round 17, r16 verdict item 1) — the
-    * as-of-style replacement for the dense `sequence(lo, hi)` spine:
-    *
-    * `spine` is the set of buckets the caller needs OUTPUT rows at
-    * (one (group, "__d") row each — typically the distinct observed
-    * buckets); `deltas` carries the difference-array payload, possibly
-    * at buckets NOT in the spine (a trailing frame's −1 "age-out" row
-    * lands at b+w, which need not be observed). Union the two with a
-    * spine flag, re-aggregate per (group, bucket) — groupBy treats a
-    * NULL group key as ONE real group, so no null-safe join machinery
-    * is needed — run the running sums over the MERGED sparse bucket
-    * set, and keep only spine rows. The running value at a spine
-    * bucket d then includes every delta at buckets ≤ d whether or not
-    * those buckets are in the spine — exactly what the dense spine's
-    * left join + cumulative sum computed, at cost ∝ (observed buckets
-    * + delta rows) instead of ∝ domain span. Output: spine rows only,
-    * with `payload` columns coalesced to 0 and the "__sp" flag
-    * dropped; caller runs its running sums BEFORE the spine filter via
-    * the returned frame — so this helper returns the merged frame plus
-    * the flag, and [[sparseRunning]] finishes the job. */
-  private def sparseMerge(spine: DataFrame, deltas: DataFrame,
-      by: Seq[String], payload: Seq[String]): DataFrame = {
+  /** Run a difference array over a spine. `deltas` holds raw
+    * (group, "__d", "__dc"[, "__dv"]) rows, possibly at buckets NOT in
+    * the spine (a trailing frame's −1 age-out row lands at b+w). Union
+    * them with the spine (zero payload, flagged), sum per (group, bucket)
+    * — groupBy treats a NULL group key as ONE real group, the window
+    * semantics — run the Long-exact running sums over the merged buckets
+    * in one [[GlobalWindow.groupedCumSumsLong]] pass, and keep the spine
+    * rows. The running value at a spine bucket d thus includes every
+    * delta at buckets ≤ d, in the spine or not. Output: (group, "__d",
+    * "__cc"[, "__cv"]), one row per spine bucket. */
+  private def running(spine: DataFrame, deltas: DataFrame,
+      by: Seq[String]): DataFrame = {
     val byd = (by :+ "__d").map(col)
-    val s = spine.select(byd ++
-      payload.map(p => lit(0L).as(p)) :+ lit(1).as("__sp"): _*)
-    val d = deltas.select(byd ++
-      payload.map(col) :+ lit(0).as("__sp"): _*)
-    val aggs = payload.map(p => sum(col(p)).as(p)) :+
+    val payload = Seq("__dc" -> "__cc", "__dv" -> "__cv")
+      .filter(p => deltas.columns.contains(p._1))
+    val aggs = payload.map(p => sum(col(p._1)).as(p._1)) :+
       max(col("__sp")).as("__sp")
-    s.unionByName(d)
+    val merged = spine
+      .select(byd ++ payload.map(p => lit(0L).as(p._1)) :+
+        lit(1).as("__sp"): _*)
+      .unionByName(deltas.select(byd ++ payload.map(p => col(p._1)) :+
+        lit(0).as("__sp"): _*))
       .groupBy(byd: _*)
       .agg(aggs.head, aggs.tail: _*)
-      .select(byd ++ payload.map(p =>
-        coalesce(col(p), lit(0L)).as(p)) :+ col("__sp"): _*)
-  }
-
-  /** Run the Long-exact running sums over a [[sparseMerge]] frame and
-    * keep the spine rows. Dual payloads ride ONE
-    * [[GlobalWindow.groupedCumSumsLong]] pass (round 17, optimization):
-    * the previous per-payload fold paid the bounds-sampling job, the
-    * (group, pid) window and the offset broadcast join once per
-    * payload — N running sums in the same order need only extra
-    * aggregate buffers in the same passes. */
-  private def sparseRunning(merged: DataFrame, by: Seq[String],
-      payload: Seq[(String, String)]): DataFrame = {
     // SHARED MATERIALIZATION (round 18): GlobalWindow's two-pass
     // scaffold consumes its input through a plan diamond (the local
     // sweep window AND the per-(group, pid) offset aggregate), and the
@@ -159,9 +127,11 @@ object RollingDistinct {
     // TWICE per frame (verified in the r17/r18 executed plans: two
     // full subtrees, no ReusedExchange; an explicit shared repartition
     // was tried first and pruning still split it). A LAZY localCheckpoint
-    // truncates the plan at the merged frame — bucket-domain-sized, far
-    // smaller than the input — so both branches scan ONE stored copy:
-    // one full upstream pass saved for every distinct-window lowering.
+    // truncates the plan at the merged frame so both branches scan ONE
+    // stored copy. That frame holds one row per spine bucket plus one
+    // per delta-only bucket: on an observed spine at most the observed
+    // buckets and their age-out buckets, on a dense spine each group's
+    // FULL span — up to `maxBucketSpan` rows per group.
     // Lazy (eager=false): the first action — GlobalWindow's own bounds
     // sampling at construction — materializes it; RDD-level blocks are
     // released by ContextCleaner once the query's RDDs are unreachable
@@ -170,9 +140,8 @@ object RollingDistinct {
     // checkpoints (documented there): on a real cluster, reliable
     // checkpoint.
     val shared = merged.localCheckpoint(false)
-    val cum = GlobalWindow.groupedCumSumsLong(shared, by,
-      Seq(col("__d")), payload)
-    cum.filter(col("__sp") === 1).drop("__sp")
+    GlobalWindow.groupedCumSumsLong(shared, by, Seq(col("__d")), payload)
+      .filter(col("__sp") === 1).drop("__sp")
   }
 
   /** Append the exact trailing-`w`-bucket distinct count of `idCol`,
@@ -182,7 +151,7 @@ object RollingDistinct {
     * (`bucketCol` long, `outCol` long), one row per bucket in span.
     *
     * `bucketCol` must be integral (epoch days/hours/...; quantize
-    * first). The span materializes one spine row per bucket via
+    * first). The dense spine materializes one row per bucket via
     * `sequence()` from a single min/max aggregate — bounded by the
     * bucket-domain size, not by |df|. */
   def trailingDistinct(df: DataFrame, idCol: String, bucketCol: String,
@@ -190,162 +159,111 @@ object RollingDistinct {
     groupedTrailingDistinct(df, Nil, idCol, bucketCol, w, outCol)
 
   /** Grouped form: the same decomposition per `by` group (rolling
-    * uniques per source/domain/tenant). Group columns ride every stage
-    * as extra keys; the spine is each group's own [min, max] span; the
-    * final running sum is [[GlobalWindow.groupedCumSumLong]], so few
-    * hot groups get G×P parallelism instead of a G-task window cap.
-    *
-    * `dense = true` (the default) keeps the documented one-row-per-
-    * bucket-in-span output (quiet buckets included) via the sequence
-    * spine, guarded by `maxBucketSpan`; `dense = false` (round 17 —
-    * what [[graft.plans.RollingDistinctRewrite]] uses) evaluates ONLY
-    * at the observed buckets of `spineFrom.getOrElse(df)` through
-    * [[sparseMerge]], with NO dense sequence and no span guard: a
-    * sparse 64-bit domain (epoch micros/nanos) costs ∝ data, not ∝
-    * span. `w` is Long so micros-granular frame widths fit. */
+    * uniques per source/domain/tenant), one row per bucket of each
+    * group's span of `spineFrom.getOrElse(df)` — the count half of
+    * [[groupedTrailingDistinctSum]] over a dense spine. `w` is Long so
+    * micros-granular frame widths fit. */
   def groupedTrailingDistinct(df: DataFrame, by: Seq[String], idCol: String,
       bucketCol: String, w: Long,
       outCol: String = "distinct_cnt",
-      spineFrom: Option[DataFrame] = None,
-      dense: Boolean = true): DataFrame = {
-    require(w >= 1, "window width must be >= 1 bucket")
-    import org.apache.spark.sql.expressions.Window
+      spineFrom: Option[DataFrame] = None): DataFrame =
+    trailing(df, by, idCol, bucketCol, w, outCol, None, spineFrom,
+      dense = true)
 
-    val byCols = by.map(col)
-    val pairs = df.select(byCols :+ col(idCol).as("__id") :+
-      col(bucketCol).cast("long").as("__b"): _*).distinct()
-    val perId = Window.partitionBy(byCols :+ col("__id"): _*)
-      .orderBy(col("__b"))
-    val edges = pairs
-      .withColumn("__prev", lag(col("__b"), 1).over(perId))
-      .select(byCols :+ col("__b") :+
-        (when(col("__prev").isNull, col("__b"))
-          .otherwise(greatest(col("__b"), col("__prev") + w))
-          .as("__start")): _*)
-    // two delta rows per (group, id, bucket) pair: +1 where the id
-    // enters the trailing window, -1 where it ages out
-    val deltaRows = edges.select(byCols :+ explode(array(
-        struct(col("__start").as("__d"), lit(1L).as("__delta")),
-        struct((col("__b") + w).as("__d"), lit(-1L).as("__delta"))))
-        .as("__e"): _*)
-      .select(byCols :+ col("__e.__d").as("__d") :+
-        col("__e.__delta").as("__delta"): _*)
-    // dense needs unique (group, __d) keys for the spine LEFT JOIN; the
-    // sparse path feeds RAW delta rows straight into sparseMerge, whose
-    // (group, __d) aggregate absorbs the pre-aggregation — one fewer
-    // full exchange (round 17, optimization; sums are associative so
-    // the merged totals are identical)
-    val deltas =
-      if (dense) deltaRows.groupBy((by :+ "__d").map(col): _*)
-        .agg(sum(col("__delta")).as("__delta"))
-      else deltaRows
-
-    val joined =
-      if (dense) {
-        // dense bucket spine over each group's observed span (one row
-        // per group → sequence; size = group's bucket-domain, not
-        // data). `spineFrom` widens the span beyond df's own buckets
-        // when the caller must evaluate trailing windows at buckets df
-        // doesn't carry; deltas falling past the spine are dropped by
-        // the left join and can only affect buckets past it — never
-        // one inside.
-        val spine = spineFrom.getOrElse(df).groupBy(byCols: _*)
-          .agg(min(col(bucketCol).cast("long")).as("__lo"),
-            max(col(bucketCol).cast("long")).as("__hi"))
-          .select(byCols :+ explode(sequence(col("__lo"), guardedHi(df)))
-            .as("__d"): _*)
-        joinSpineDeltas(spine, deltas, by, Seq("__delta"))
-          .withColumn("__delta", coalesce(col("__delta"), lit(0L)))
-          .withColumn("__sp", lit(1))
-      } else {
-        // SPARSE spine (round 17): evaluate only at observed buckets;
-        // age-out deltas at unobserved b+w ride the merged running sum
-        // and are filtered after — no sequence, no span guard.
-        val spineB = spineFrom.getOrElse(df)
-          .select(byCols :+ col(bucketCol).cast("long").as("__d"): _*)
-          .filter(col("__d").isNotNull).distinct()
-        sparseMerge(spineB, deltas, by, Seq("__delta"))
-      }
-    sparseRunning(joined, by, Seq("__delta" -> "__cum"))
-      .select(byCols :+ col("__d").as(bucketCol) :+
-        col("__cum").cast("long").as(outCol): _*)
-  }
-
-  /** Dual-aggregate form: exact trailing COUNT(DISTINCT v) AND
-    * SUM(DISTINCT v) over the same trailing bucket window, one frame.
+  /** Exact trailing COUNT(DISTINCT v) AND SUM(DISTINCT v) over a
+    * trailing `w`-bucket window, one frame per (group, bucket).
     *
-    * The difference-array decomposition generalizes verbatim: a value's
-    * first appearance inside the trailing window contributes 1 to the
-    * distinct count and `v` to the distinct sum, so each distinct
-    * (group, v, bucket) pair emits TWO weighted delta rows —
-    * (+1, +v) where the value enters the window, (−1, −v) where it ages
-    * out — and two running sums over the bucket domain recover both
-    * aggregates exactly. `valueCol` must be integral (the sum rides
-    * exact 64-bit arithmetic; running partials are bounded by the true
-    * trailing distinct-sum magnitude, so ANSI overflow implies the
-    * answer itself overflows). SQL semantics preserved downstream:
-    * SUM over an empty frame is NULL while COUNT is 0 — callers gate
-    * the sum on `cntCol > 0` ([[graft.plans.RollingDistinctRewrite]]
-    * does). Output: (by..., bucketCol long, cntCol long, sumCol long). */
+    * The difference-array decomposition: a value's first appearance
+    * inside the trailing window contributes 1 to the distinct count and
+    * `v` to the distinct sum, so each distinct (group, v, bucket) pair
+    * emits TWO weighted delta rows — (+1, +v) where the value enters the
+    * window, (−1, −v) where it ages out — and two running sums over the
+    * bucket domain recover both aggregates exactly. Distinctness is by
+    * the RAW value (any atomic type or struct); the sum carrier is
+    * `try_cast(v AS BIGINT)` after the distinct pass, or null where
+    * bigint cannot be cast from the type. The sum is only meaningful
+    * for integral `valueCol` (exact 64-bit arithmetic; running partials
+    * are bounded by the true trailing distinct-sum magnitude, so ANSI
+    * overflow implies the answer itself overflows). SQL semantics
+    * preserved downstream: SUM over an empty frame is NULL while COUNT
+    * is 0 — callers gate the sum on `cntCol > 0`
+    * ([[graft.plans.RollingDistinctRewrite]] does).
+    *
+    * The spine decides the output rows: `dense = true` (the default)
+    * reports every bucket of each group's span of
+    * `spineFrom.getOrElse(df)`, quiet buckets included, guarded by
+    * `maxBucketSpan`; `dense = false` reports only its observed buckets,
+    * so a sparse 64-bit domain (epoch micros/nanos) costs ∝ data, not ∝
+    * span. Output: (by..., bucketCol long, cntCol long, sumCol long). */
   def groupedTrailingDistinctSum(df: DataFrame, by: Seq[String],
       valueCol: String, bucketCol: String, w: Long,
       cntCol: String, sumCol: String,
       spineFrom: Option[DataFrame] = None,
-      dense: Boolean = true): DataFrame = {
+      dense: Boolean = true): DataFrame =
+    trailing(df, by, valueCol, bucketCol, w, cntCol, Some(sumCol),
+      spineFrom, dense)
+
+  /** The one trailing lowering behind both public forms: distinct
+    * (group, value, bucket) pairs, per-value lag edges, two delta rows
+    * per pair, [[running]] over the chosen spine. The sum carrier rides
+    * only when `sumCol` is given: a count-only caller neither pays for it
+    * nor overflows int64 summing large-magnitude ids (64-bit hashes) it
+    * never reads. Output: (by..., bucketCol, cntCol[, sumCol]). */
+  private[graft] def trailing(df: DataFrame, by: Seq[String],
+      valueCol: String, bucketCol: String, w: Long, cntCol: String,
+      sumCol: Option[String], spineFrom: Option[DataFrame],
+      dense: Boolean): DataFrame = {
     require(w >= 1, "window width must be >= 1 bucket")
     import org.apache.spark.sql.expressions.Window
 
     val byCols = by.map(col)
-    val pairs = df.select(byCols :+ col(valueCol).cast("long").as("__v") :+
+    val pairs = df.select(byCols :+ col(valueCol).as("__v") :+
       col(bucketCol).cast("long").as("__b"): _*).distinct()
     val perV = Window.partitionBy(byCols :+ col("__v"): _*)
       .orderBy(col("__b"))
     val edges = pairs
       .withColumn("__prev", lag(col("__b"), 1).over(perV))
-      .select(byCols :+ col("__v") :+ col("__b") :+
+      .select(byCols :+ col("__b") :+
+        sumCarrier(df, valueCol, col("__v")).as("__s") :+
         (when(col("__prev").isNull, col("__b"))
           .otherwise(greatest(col("__b"), col("__prev") + w))
           .as("__start")): _*)
-    val deltaRows = edges.select(byCols :+ explode(array(
-        struct(col("__start").as("__d"), lit(1L).as("__dc"),
-          col("__v").as("__dv")),
-        struct((col("__b") + w).as("__d"), lit(-1L).as("__dc"),
-          (-col("__v")).as("__dv")))).as("__e"): _*)
-      .select(byCols :+ col("__e.__d").as("__d") :+
-        col("__e.__dc").as("__dc") :+ col("__e.__dv").as("__dv"): _*)
-    // dense keeps the unique-key pre-aggregation for the spine join;
-    // sparse lets sparseMerge's own (group, __d) aggregate do it — one
-    // fewer exchange (round 17, optimization)
-    val deltas =
-      if (dense) deltaRows.groupBy((by :+ "__d").map(col): _*)
-        .agg(sum(col("__dc")).as("__dc"), sum(col("__dv")).as("__dv"))
-      else deltaRows
+    // two delta rows per (group, value, bucket) pair: (+1, +v) where the
+    // value enters the trailing window, (-1, -v) where it ages out
+    def delta(d: Column, dc: Long, dv: Column): Column = struct(
+      Seq(d.as("__d"), lit(dc).as("__dc")) ++
+        sumCol.map(_ => dv.as("__dv")): _*)
+    val deltas = edges.select(byCols :+ explode(array(
+        delta(col("__start"), 1L, col("__s")),
+        delta(col("__b") + w, -1L, -col("__s")))).as("__e"): _*)
+      .select(byCols :+ col("__e.*"): _*)
+    running(spine(spineFrom.getOrElse(df), by,
+        col(bucketCol).cast("long"), dense), deltas, by)
+      .select(byCols ++ Seq(col("__d").as(bucketCol),
+        col("__cc").cast("long").as(cntCol)) ++
+        sumCol.map(col("__cv").cast("long").as(_)): _*)
+  }
 
-    val joined =
-      if (dense) {
-        val spine = spineFrom.getOrElse(df).groupBy(byCols: _*)
-          .agg(min(col(bucketCol).cast("long")).as("__lo"),
-            max(col(bucketCol).cast("long")).as("__hi"))
-          .select(byCols :+ explode(sequence(col("__lo"), guardedHi(df)))
-            .as("__d"): _*)
-        joinSpineDeltas(spine, deltas, by, Seq("__dc", "__dv"))
-          .withColumn("__dc", coalesce(col("__dc"), lit(0L)))
-          .withColumn("__dv", coalesce(col("__dv"), lit(0L)))
-          .withColumn("__sp", lit(1))
-      } else {
-        val spineB = spineFrom.getOrElse(df)
-          .select(byCols :+ col(bucketCol).cast("long").as("__d"): _*)
-          .filter(col("__d").isNotNull).distinct()
-        sparseMerge(spineB, deltas, by, Seq("__dc", "__dv"))
-      }
-    // both running sums ride the same pid-stamped two-pass scaffold
-    // (Long-exact — r16 ADVICE); the second pass consumes the first's
-    // output (sparse-bucket-sized frames, so the extra pass is cheap)
-    sparseRunning(joined, by,
-        Seq("__dc" -> "__cc", "__dv" -> "__cv"))
-      .select(byCols :+ col("__d").as(bucketCol) :+
-        col("__cc").cast("long").as(cntCol) :+
-        col("__cv").cast("long").as(sumCol): _*)
+  /** The first-occurrence difference array behind both cumulative
+    * forms: one (+1, +v) delta per distinct non-null value at its FIRST
+    * non-null `bucket`, run over the observed spine of `spineSrc`.
+    * Distinct is by the RAW value (round-15 review fix): COUNT(DISTINCT)
+    * is claimed for ANY atomic type, and an eager cast("long") would
+    * conflate distinct non-integral values (1.2 and 1.7 both → 1) or
+    * ANSI-throw on strings; the sum carrier casts AFTER the distinct
+    * pass. Output as [[running]]. */
+  private def cumulative(df: DataFrame, by: Seq[String], valueCol: String,
+      bucket: Column, spineSrc: DataFrame): DataFrame = {
+    val byCols = by.map(col)
+    val deltas = df
+      .select(byCols :+ col(valueCol).as("__v") :+ bucket.as("__b"): _*)
+      .filter(col("__v").isNotNull && col("__b").isNotNull)
+      .distinct()
+      .groupBy(byCols :+ col("__v"): _*)
+      .agg(min(col("__b")).as("__d"))
+      .select(byCols :+ col("__d") :+ lit(1L).as("__dc") :+
+        sumCarrier(df, valueCol, col("__v")).as("__dv"): _*)
+    running(spine(spineSrc, by, bucket, dense = false), deltas, by)
   }
 
   /** CUMULATIVE distinct count AND sum — the `RANGE UNBOUNDED
@@ -359,88 +277,28 @@ object RollingDistinct {
     * first as ONE peer group whose frame is just itself, and every
     * non-null row's frame INCLUDES them — fall out of the sentinel
     * sorting below every real bucket. `spineFrom` (default `df`)
-    * decides which buckets get output rows: each group's [min, max]
-    * span of non-null buckets, plus the sentinel row for groups with
-    * null-bucket rows. */
+    * decides which buckets get output rows: each group's observed
+    * buckets, plus the sentinel row for groups with null-bucket rows. */
   def groupedCumulativeDistinctSum(df: DataFrame, by: Seq[String],
       valueCol: String, bucketCol: String,
       cntCol: String, sumCol: String,
-      spineFrom: Option[DataFrame] = None,
-      dense: Boolean = true): DataFrame = {
-    val carrier: Column =
-      if (sumCastable(df, valueCol)) col("__v").try_cast("bigint")
-      else lit(null).cast("bigint")
+      spineFrom: Option[DataFrame] = None): DataFrame = {
     val SENT = Long.MinValue
     // in-band sentinel safety (r13 ADVICE): a LEGITIMATE bucket equal
     // to Long.MinValue would be conflated with the null peer group
     // (and re-emitted as a null-bucket row) — reject it loudly. A
     // when() on a null bucket falls through to otherwise(), so the
     // null → SENT fold is unaffected.
-    def checkedB(c: Column): Column =
-      when(c === SENT, raise_error(lit(
+    val bucket = {
+      val c = col(bucketCol).cast("long")
+      coalesce(when(c === SENT, raise_error(lit(
         "rolling-distinct: order-key bucket Long.MinValue collides " +
           "with the null-bucket sentinel — shift or re-quantize the " +
           "order key")).cast("long"))
-        .otherwise(c)
-    val byCols = by.map(col)
-    // distinct by the RAW value (round-15 review fix): COUNT(DISTINCT)
-    // is claimed for ANY atomic type, and an eager cast("long") here
-    // would conflate distinct non-integral values (1.2 and 1.7 both →
-    // 1) or ANSI-throw on strings. The sum carrier casts AFTER the
-    // distinct pass — try_cast, so non-numeric types yield a null
-    // (unused: the rewrite only reads the sum for integral-eligible
-    // SUM/AVG targets, where the cast is the identity).
-    val pairs = df
-      .select(byCols :+ col(valueCol).as("__v") :+
-        coalesce(checkedB(col(bucketCol).cast("long")), lit(SENT))
-          .as("__b"): _*)
-      .filter(col("__v").isNotNull)
-      .distinct()
-    val firstOcc = pairs.groupBy(byCols :+ col("__v"): _*)
-      .agg(min(col("__b")).as("__d"))
-    // one (+1, +v) delta per distinct value at its first bucket; the
-    // sparse path feeds these rows RAW into sparseMerge (whose own
-    // (group, __d) aggregate absorbs the per-bucket pre-aggregation —
-    // one fewer exchange, round 17 optimization); dense keeps the
-    // unique-key aggregate for the spine LEFT JOIN
-    def deltas(aggregated: Boolean): DataFrame =
-      if (aggregated) firstOcc.groupBy((by :+ "__d").map(col): _*)
-        .agg(count(lit(1)).as("__dc"), sum(carrier).as("__dv"))
-      else firstOcc.select(byCols :+ col("__d") :+
-        lit(1L).as("__dc") :+ carrier.as("__dv"): _*)
-
-    val spineSrc = spineFrom.getOrElse(df)
-    val joined =
-      if (dense) {
-        val realSpan = spineSrc.filter(col(bucketCol).isNotNull)
-          .groupBy(byCols: _*)
-          .agg(min(checkedB(col(bucketCol).cast("long"))).as("__lo"),
-            max(col(bucketCol).cast("long")).as("__hi"))
-          .select(byCols :+ explode(sequence(col("__lo"),
-            guardedHi(spineSrc))).as("__d"): _*)
-        val sentSpine = spineSrc.filter(col(bucketCol).isNull)
-          .select(byCols: _*).distinct()
-          .withColumn("__d", lit(SENT))
-          .select(realSpan.columns.map(col): _*)
-        joinSpineDeltas(realSpan.unionByName(sentSpine),
-            deltas(aggregated = true), by, Seq("__dc", "__dv"))
-          .withColumn("__dc", coalesce(col("__dc"), lit(0L)))
-          .withColumn("__dv", coalesce(col("__dv"), lit(0L)))
-          .withColumn("__sp", lit(1))
-      } else {
-        // sparse: observed buckets only (null → the −∞ sentinel row,
-        // exactly the dense path's sentSpine); the sentinel check
-        // rides the same checkedB guard
-        val spineB = spineSrc.select(byCols :+
-            coalesce(checkedB(col(bucketCol).cast("long")), lit(SENT))
-              .as("__d"): _*)
-          .distinct()
-        sparseMerge(spineB, deltas(aggregated = false), by,
-          Seq("__dc", "__dv"))
-      }
-    sparseRunning(joined, by,
-        Seq("__dc" -> "__cc", "__dv" -> "__cv"))
-      .select(byCols :+
+        .otherwise(c), lit(SENT))
+    }
+    cumulative(df, by, valueCol, bucket, spineFrom.getOrElse(df))
+      .select(by.map(col) :+
         when(col("__d") === SENT, lit(null).cast("long"))
           .otherwise(col("__d")).as(bucketCol) :+
         col("__cc").cast("long").as(cntCol) :+
@@ -469,52 +327,11 @@ object RollingDistinct {
   def groupedCumulativeDistinctSumNullsLast(df: DataFrame, by: Seq[String],
       valueCol: String, bucketCol: String,
       cntCol: String, sumCol: String,
-      spineFrom: Option[DataFrame] = None,
-      dense: Boolean = true): DataFrame = {
-    val carrier: Column =
-      if (sumCastable(df, valueCol)) col("__v").try_cast("bigint")
-      else lit(null).cast("bigint")
+      spineFrom: Option[DataFrame] = None): DataFrame = {
     val byCols = by.map(col)
-    // raw-value distinct + post-distinct try_cast sum carrier — the
-    // same any-atomic-type COUNT contract as the nulls-first sibling
-    val pairs = df.filter(col(bucketCol).isNotNull)
-      .select(byCols :+ col(valueCol).as("__v") :+
-        col(bucketCol).cast("long").as("__b"): _*)
-      .filter(col("__v").isNotNull)
-      .distinct()
-    val firstOcc = pairs.groupBy(byCols :+ col("__v"): _*)
-      .agg(min(col("__b")).as("__d"))
-    // same raw-vs-aggregated delta split as the nulls-first sibling
-    // (round 17 optimization: sparse skips the pre-aggregation)
-    def deltas(aggregated: Boolean): DataFrame =
-      if (aggregated) firstOcc.groupBy((by :+ "__d").map(col): _*)
-        .agg(count(lit(1)).as("__dc"), sum(carrier).as("__dv"))
-      else firstOcc.select(byCols :+ col("__d") :+
-        lit(1L).as("__dc") :+ carrier.as("__dv"): _*)
-
     val spineSrc = spineFrom.getOrElse(df)
-    val joined =
-      if (dense) {
-        val realSpan = spineSrc.filter(col(bucketCol).isNotNull)
-          .groupBy(byCols: _*)
-          .agg(min(col(bucketCol).cast("long")).as("__lo"),
-            max(col(bucketCol).cast("long")).as("__hi"))
-          .select(byCols :+ explode(sequence(col("__lo"),
-            guardedHi(spineSrc))).as("__d"): _*)
-        joinSpineDeltas(realSpan, deltas(aggregated = true), by,
-            Seq("__dc", "__dv"))
-          .withColumn("__dc", coalesce(col("__dc"), lit(0L)))
-          .withColumn("__dv", coalesce(col("__dv"), lit(0L)))
-          .withColumn("__sp", lit(1))
-      } else {
-        val spineB = spineSrc.filter(col(bucketCol).isNotNull)
-          .select(byCols :+ col(bucketCol).cast("long").as("__d"): _*)
-          .distinct()
-        sparseMerge(spineB, deltas(aggregated = false), by,
-          Seq("__dc", "__dv"))
-      }
-    val nonNullArm = sparseRunning(joined, by,
-        Seq("__dc" -> "__cc", "__dv" -> "__cv"))
+    val nonNullArm = cumulative(df, by, valueCol,
+        col(bucketCol).cast("long"), spineSrc)
       .select(byCols :+ col("__d").as(bucketCol) :+
         col("__cc").cast("long").as(cntCol) :+
         col("__cv").cast("long").as(sumCol): _*)
@@ -528,9 +345,7 @@ object RollingDistinct {
     // get a parse error — or silently resolve the wrong column
     val nullArm = spineSrc.groupBy(byCols: _*)
       .agg(count_distinct(col(valueCol)).as(cntCol),
-        sum_distinct(if (sumCastable(spineSrc, valueCol))
-            col(valueCol).try_cast("bigint")
-          else lit(null).cast("bigint"))
+        sum_distinct(sumCarrier(spineSrc, valueCol, col(valueCol)))
           .cast("long").as(sumCol),
         max(when(col(bucketCol).isNull, lit(1)).otherwise(lit(0)))
           .as("__hasnull"))

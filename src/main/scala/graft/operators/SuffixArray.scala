@@ -62,6 +62,10 @@ object SuffixArray {
     * passes cover any corpus up to 256 tokens/doc (f → f² ≥ maxTok),
     * three up to 4096, degrading gracefully beyond; at scale a wider
     * shuffle row beats an extra full shuffle round anyway. */
+  /** Largest distinct-key table [[rankPass]] ranks in one task and
+    * broadcasts back; larger tables take the range-partitioned sweep. */
+  private val BroadcastRankRows = 1000000L
+
   private def pickFan(maxTok: Int): Int =
     math.min(16, math.max(4, math.ceil(math.sqrt(maxTok.toDouble)).toInt))
   private def KN(j: Int) = s"__sa_k${j}__"
@@ -72,8 +76,8 @@ object SuffixArray {
     * rows of `df` under the lexicographic ascending order of `keyCols`,
     * computed over the DISTINCT-KEY table (orders smaller than the
     * corpus), ADAPTIVELY:
-    *   - small key table (<= `spark.graft.sa.broadcastRankRows`,
-    *     default 1e6): one-task running sum over the keys + BROADCAST
+    *   - small key table (<= [[BroadcastRankRows]] keys): one-task
+    *     running sum over the keys + BROADCAST
     *     hash join back — the big frame is never shuffled at all;
     *   - large key table: [[GlobalWindow.cumSumLong]] range-partitioned
     *     sweep + shuffle join — no single-partition exchange at scale.
@@ -101,16 +105,13 @@ object SuffixArray {
     // keep only rows whose rank did not move this pass.
     val OUT = "__sa_out__"
     require(!keyCols.contains(OUT) && !keep.contains(OUT))
-    val bcastMax = df.sparkSession.conf
-      .getOption("spark.graft.sa.broadcastRankRows")
-      .flatMap(_.toLongOption).filter(_ >= 0L).getOrElse(1000000L)
     val keys = df.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as(CNT)).persist()
     cleanup += keys
     val st = keys.agg(count(lit(1)).as("n"), max(col(CNT)).as("t")).head()
     val (nKeys, maxTie) = (st.getLong(0), st.getLong(1))
     val ranked =
-      if (nKeys <= bcastMax) {
+      if (nKeys <= BroadcastRankRows) {
         val w = Window.orderBy(keyCols.map(col): _*)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         broadcast(keys

@@ -456,8 +456,7 @@ case class RollingDistinctRewrite(spark: SparkSession)
     // order, frame) signature share ONE difference-array lookup and
     // ONE back-join — `count(DISTINCT x)` and `sum(DISTINCT x)` in one
     // window node cost one frame, not two (the dual frame carries both
-    // running aggregates anyway). Count-only groups keep the lean
-    // count-only pipeline.
+    // running aggregates anyway).
     // the id component is the CANONICALIZED expression tree (since
     // round 16 the target may be any deterministic expression, which
     // has no exprId; canonicalized equality is collision-free where a
@@ -512,8 +511,8 @@ case class RollingDistinctRewrite(spark: SparkSession)
       // OFFSET frames (m ≠ 0) evaluate their lowering at the SHIFTED
       // bucket b−m, which need not itself be an observed bucket —
       // widen the spine with the shifted copies so every probe bucket
-      // has a frame row (under the round-17 SPARSE lowering this adds
-      // at most one extra spine bucket per observed bucket — ≤2×
+      // has a frame row (on the observed spine this adds at most one
+      // extra spine bucket per observed bucket — ≤2×
       // observed, never span-proportional; duplicated rows cannot
       // change the lowerings' DISTINCT totals or sentinel detection)
       def widened(src: DataFrame): DataFrame =
@@ -533,7 +532,7 @@ case class RollingDistinctRewrite(spark: SparkSession)
               proj.filter(col(idName).isNotNull), by = gNames,
               valueCol = idName, bucketCol = bName,
               cntCol = cntName, sumCol = sumName,
-              spineFrom = Some(widened(proj)), dense = false)
+              spineFrom = Some(widened(proj)))
         case None =>
           // UNBOUNDED PRECEDING (the default frame — cumulative
           // distinct): one first-occurrence difference array serves
@@ -546,43 +545,26 @@ case class RollingDistinctRewrite(spark: SparkSession)
             proj.filter(col(idName).isNotNull), by = gNames,
             valueCol = idName, bucketCol = bName,
             cntCol = cntName, sumCol = sumName,
-            spineFrom = Some(widened(proj)), dense = false)
+            spineFrom = Some(widened(proj)))
         case Some(nPrec) =>
-          val (frame, nullArm) =
-            if (!needsSum) {
-              val f = graft.operators.RollingDistinct
-                .groupedTrailingDistinct(
-                  idBearing, by = gNames, idCol = idName,
-                  bucketCol = bName,
-                  w = nPrec - t.mPreceding + 1,
-                  outCol = cntName, spineFrom = spineSrc,
-                  dense = false)
-              val na = proj.filter(col(bName).isNull)
-                .groupBy(gNames.map(col): _*)
-                .agg(count_distinct(col(idName)).as(cntName))
-                .withColumn(bName, lit(null).cast("long"))
-                .select(f.columns.map(col): _*)
-              (f, na)
-            } else {
-              val f = graft.operators.RollingDistinct
-                .groupedTrailingDistinctSum(
-                  idBearing, by = gNames, valueCol = idName,
-                  bucketCol = bName,
-                  w = nPrec - t.mPreceding + 1,
-                  cntCol = cntName, sumCol = sumName,
-                  spineFrom = spineSrc, dense = false)
-              // null-order-key peer frame: count AND sum of the
-              // distinct ids among null-bucket rows (sum_distinct of
-              // an all-null / empty set is NULL — matching the naive
-              // semantics)
-              val na = proj.filter(col(bName).isNull)
-                .groupBy(gNames.map(col): _*)
-                .agg(count_distinct(col(idName)).as(cntName),
-                  sum_distinct(col(idName)).cast("long").as(sumName))
-                .withColumn(bName, lit(null).cast("long"))
-                .select(f.columns.map(col): _*)
-              (f, na)
-            }
+          // count-only signatures carry no sum: they neither pay for it
+          // nor overflow int64 summing large ids they never read
+          val frame = graft.operators.RollingDistinct.trailing(
+            idBearing, by = gNames, valueCol = idName, bucketCol = bName,
+            w = nPrec - t.mPreceding + 1, cntCol = cntName,
+            sumCol = Some(sumName).filter(_ => needsSum),
+            spineFrom = spineSrc, dense = false)
+          // null-order-key peer frame: count (AND sum, if carried) of
+          // the distinct ids among null-bucket rows (sum_distinct of an
+          // all-null / empty set is NULL — matching the naive semantics)
+          val naAggs = count_distinct(col(idName)).as(cntName) +:
+            (if (needsSum) Seq(sum_distinct(col(idName)).cast("long")
+              .as(sumName)) else Nil)
+          val nullArm = proj.filter(col(bName).isNull)
+            .groupBy(gNames.map(col): _*)
+            .agg(naAggs.head, naAggs.tail: _*)
+            .withColumn(bName, lit(null).cast("long"))
+            .select(frame.columns.map(col): _*)
           frame.unionByName(nullArm)
       }
       // the probe joins at the SHIFTED bucket for strictly-offset

@@ -423,15 +423,18 @@ object TimeSeriesQueries {
     StatefulStreamKeys ++ Set("join_stream_static", "join_stream_scd2",
       "stream_sink_idempotent")
 
+  /** Shuffle partitions of every stateful stream key's micro-batches. */
+  private val StreamShufflePartitions = 4L
+
   private def withStreamParts[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // Parameterized (round 18): the per-stream state-sizing knob a real
-    // deployment tunes — state-store instances scale with partitions
-    // (a stream-stream join keeps FOUR per partition per micro-batch),
-    // not with rows, at this volume. Default 4 = the round-9 measured
-    // optimum; production sizes it to sustained input rate.
-    val parts = s.conf.get("spark.graft.stream.shufflePartitions", "4")
-    try { s.conf.set("spark.sql.shuffle.partitions", parts); body }
+    // State-store instances scale with partitions (a stream-stream join
+    // keeps FOUR per partition per micro-batch), not with rows, at this
+    // volume: StreamShufflePartitions is the round-9 measured optimum.
+    try {
+      s.conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
+      body
+    }
     finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 

@@ -44,7 +44,8 @@ class RollingDistinctSpec extends AnyFunSuite {
     val gen = for {
       n <- Gen.choose(1, 60); w <- Gen.choose(1, 9)
       rows <- Gen.listOfN(n, for {
-        g <- Gen.oneOf("x", "y", "z"); id <- Gen.choose(0L, 7L)
+        // null is one more group, as in window semantics
+        g <- Gen.oneOf("x", "y", "z", null); id <- Gen.choose(0L, 7L)
         b <- Gen.choose(100L, 130L)
       } yield (g, id, b))
     } yield (rows, w)
@@ -129,10 +130,10 @@ class RollingDistinctSpec extends AnyFunSuite {
         -> ((r.getLong(2), r.getLong(3)))).toMap
     // sentinel (null bucket): ids among null rows only = {5}
     assert(got(None) == ((1L, 5L)))
-    // day 10: {5 (incl. from nulls), 7} — 11 in span, same prefix
+    // day 10: {5 (incl. from nulls), 7}; unobserved day 11 gets no row
     assert(got(Some(10L)) == ((2L, 12L)))
-    assert(got(Some(11L)) == ((2L, 12L)))
     assert(got(Some(12L)) == ((2L, 12L)))
     assert(got(Some(13L)) == ((3L, 21L)))
+    assert(got.keySet == Set(None, Some(10L), Some(12L), Some(13L)))
   }
 }
