@@ -189,26 +189,28 @@ object RollingDistinct {
     * is 0 — callers gate the sum on `cntCol > 0`
     * ([[graft.plans.RollingDistinctRewrite]] does).
     *
-    * The spine decides the output rows: `dense = true` (the default)
-    * reports every bucket of each group's span of
+    * Output rows are every bucket of each group's span of
     * `spineFrom.getOrElse(df)`, quiet buckets included, guarded by
-    * `maxBucketSpan`; `dense = false` reports only its observed buckets,
-    * so a sparse 64-bit domain (epoch micros/nanos) costs ∝ data, not ∝
-    * span. Output: (by..., bucketCol long, cntCol long, sumCol long). */
+    * `maxBucketSpan`. Output: (by..., bucketCol long, cntCol long,
+    * sumCol long). */
   def groupedTrailingDistinctSum(df: DataFrame, by: Seq[String],
       valueCol: String, bucketCol: String, w: Long,
       cntCol: String, sumCol: String,
-      spineFrom: Option[DataFrame] = None,
-      dense: Boolean = true): DataFrame =
+      spineFrom: Option[DataFrame] = None): DataFrame =
     trailing(df, by, valueCol, bucketCol, w, cntCol, Some(sumCol),
-      spineFrom, dense)
+      spineFrom, dense = true)
 
-  /** The one trailing lowering behind both public forms: distinct
-    * (group, value, bucket) pairs, per-value lag edges, two delta rows
-    * per pair, [[running]] over the chosen spine. The sum carrier rides
-    * only when `sumCol` is given: a count-only caller neither pays for it
-    * nor overflows int64 summing large-magnitude ids (64-bit hashes) it
-    * never reads. Output: (by..., bucketCol, cntCol[, sumCol]). */
+  /** The one trailing lowering behind the public forms and
+    * [[graft.plans.RollingDistinctRewrite]]: distinct (group, value,
+    * bucket) pairs, per-value lag edges, two delta rows per pair,
+    * [[running]] over the chosen spine. `dense = true` (the public
+    * forms) reports every bucket of each group's span; `dense = false`
+    * (the rewrite) reports only the observed buckets, so a sparse 64-bit
+    * domain (epoch micros/nanos) costs ∝ data, not ∝ span. The sum
+    * carrier rides only when `sumCol` is given: a count-only caller
+    * neither pays for it nor overflows int64 summing large-magnitude ids
+    * (64-bit hashes) it never reads. Output: (by..., bucketCol, cntCol[,
+    * sumCol]). */
   private[graft] def trailing(df: DataFrame, by: Seq[String],
       valueCol: String, bucketCol: String, w: Long, cntCol: String,
       sumCol: Option[String], spineFrom: Option[DataFrame],

@@ -47,7 +47,7 @@ import org.apache.spark.sql.types.{ByteType, DateType, DayTimeIntervalType, Doub
   * window contributes `v` instead of 1, so each distinct (partition,
   * v, bucket) pair emits (±1, ±v) delta rows and two bucket-domain
   * running sums recover count and sum exactly
-  * ([[graft.operators.RollingDistinct.groupedTrailingDistinctSum]]).
+  * ([[graft.operators.RollingDistinct.trailing]]).
   *
   * Output attributes keep the ORIGINAL exprIds (the final Project
   * aliases carry them over), so parent operators resolve unchanged.
