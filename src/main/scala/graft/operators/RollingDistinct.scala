@@ -219,8 +219,12 @@ object RollingDistinct {
     import org.apache.spark.sql.expressions.Window
 
     val byCols = by.map(col)
+    // NULL is no distinct value (SQL COUNT(DISTINCT)); the spine still
+    // comes from the unfiltered input, so a bucket whose only ids are
+    // NULL reports 0
     val pairs = df.select(byCols :+ col(valueCol).as("__v") :+
-      col(bucketCol).cast("long").as("__b"): _*).distinct()
+        col(bucketCol).cast("long").as("__b"): _*)
+      .filter(col("__v").isNotNull).distinct()
     val perV = Window.partitionBy(byCols :+ col("__v"): _*)
       .orderBy(col("__b"))
     val edges = pairs

@@ -24,10 +24,8 @@ import org.apache.spark.sql.functions._
   * Round-trip scratch space is keyed by (session applicationId, sf-dir
   * basename): the sf key keeps warmup (sf0.001) and the timed/gated run
   * apart, the appId keeps two CONCURRENT harness runs over the same
-  * fixture from overwriting each other's scratch mid-read. A JVM
-  * shutdown hook removes this session's scratch tree (cleanup can't
-  * happen inside a query — the returned DataFrame reads the scratch
-  * lazily, after the query function has returned).
+  * fixture from overwriting each other's scratch mid-read
+  * ([[QueryUtil.scratchRoot]] owns the root and its cleanup).
   */
 object FormatQueries {
 
@@ -36,20 +34,9 @@ object FormatQueries {
 
   private def r4(c: Column): Column = QueryUtil.r4(c)
 
-  private val cleanupRegistered = new java.util.concurrent.atomic.AtomicBoolean
-
-  private def scratch(s: SparkSession, dir: String, fmt: String): String = {
-    val root = s"/tmp/graft_roundtrip/${s.sparkContext.applicationId}"
-    if (cleanupRegistered.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(root))
-      }))
-    s"$root/${new java.io.File(dir).getName}/$fmt"
-  }
+  private def scratch(s: SparkSession, dir: String, fmt: String): String =
+    s"${QueryUtil.scratchRoot(s, "roundtrip")}/" +
+      s"${new java.io.File(dir).getName}/$fmt"
 
   /** The shared post-read aggregation: nation-keyed supplier rollup.
     * Identical for every flat format, so the only variable is the

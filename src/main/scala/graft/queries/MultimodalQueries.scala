@@ -24,34 +24,16 @@ object MultimodalQueries {
   private def withPayload(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(col("doc_id"), payload(col("text")).as("p"))
 
-  private val cleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-  // every staged root this JVM created — the ONE shutdown hook sweeps
-  // all of them, so a JVM that opens several SparkSessions (several
-  // applicationIds) leaks none of the per-appId dirs (round-9 ADVICE)
-  private val cleanupRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Stage the BMP blob fixture once per (session, sf-dir): synthesize
     * real header bytes columnar-side ([[graft.operators.Multimodal
     * .bmpBlobCol]] — meta md5s in whole-stage codegen, header write in
     * a constant-work UDF) and land them as a binary parquet column.
     * Both BMP keys read this table, so the measured query is what a
     * production decode stage does: scan stored blobs, parse bytes.
-    * Same scratch lifecycle as FormatQueries/TimeSeriesQueries
-    * (appId-keyed, shutdown-hook removed). */
+    * Scratch lives under [[QueryUtil.scratchRoot]]. */
   private def stagedBlobsDir(s: SparkSession, dir: String, fmt: String,
       blobCol: Column => Column): String = {
-    val root = s"/tmp/graft_blobs/${s.sparkContext.applicationId}"
-    cleanupRoots.add(root)
-    if (cleanupRegistered.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        cleanupRoots.forEach(r => rm(new java.io.File(r)))
-      }))
+    val root = QueryUtil.scratchRoot(s, "blobs")
     val path = s"$root/${new java.io.File(dir).getName}/$fmt"
     this.synchronized {
       if (!new java.io.File(path, "_SUCCESS").isFile)

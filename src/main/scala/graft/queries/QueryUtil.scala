@@ -12,6 +12,30 @@ import org.apache.spark.sql.functions._
   */
 private[graft] object QueryUtil {
 
+  /** Every scratch root this JVM has handed out. The one shutdown hook
+    * removes all of them, so a JVM that opens several sessions (several
+    * applicationIds) leaks none of the per-application trees. */
+  private[graft] val scratchRoots =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private lazy val scratchCleanup: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchRoots.forEach(r => org.apache.commons.io.FileUtils
+        .deleteQuietly(new java.io.File(r)): Unit)))
+
+  /** This application's scratch tree for one family of staged files
+    * (`name`: stream, roundtrip, blobs): `/tmp/graft_<name>/<appId>`,
+    * removed at JVM exit. Keyed by applicationId so two concurrent runs
+    * over the same fixture never share scratch; cleanup cannot happen
+    * inside a query, because the returned DataFrame reads the scratch
+    * lazily after the query function has returned. */
+  def scratchRoot(s: SparkSession, name: String): String = {
+    val root = s"/tmp/graft_$name/${s.sparkContext.applicationId}"
+    scratchRoots.add(root)
+    scratchCleanup
+    root
+  }
+
   /** Parquet table loader (driver testdata layout: `<dir>/<name>.parquet`). */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.{StreamRun, StreamingOps}
 
 /** Event-time windowing via Spark's NATIVE time-window operators — the
   * batch twins of the Structured Streaming surface (SURVEY.md §2.4
@@ -51,30 +52,12 @@ object TimeSeriesQueries {
 
   private val UsPerDay = 86400000000L
 
-  /** Monotone suffix for memory-sink query names — each invocation gets
-    * a fresh sink table (Bench re-runs keys in one session) and drops it
-    * after collecting. */
-  private val streamRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private val cleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
   /** Stage the single-file events fixture into a directory for the
     * file streaming source (FileStreamSource lists a directory; the
-    * fixture layout is flat files). AppId-keyed like FormatQueries'
-    * scratch, copied once per (app, sf-dir), removed by a shutdown
-    * hook. */
+    * fixture layout is flat files): a plain copy, once per (app,
+    * sf-dir), under the [[StreamRun.scratch]] tree. */
   private def stagedEventsDir(s: SparkSession, dir: String): String = {
-    val root = s"/tmp/graft_stream/${s.sparkContext.applicationId}"
-    if (cleanupRegistered.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(root))
-      }))
-    val staged = s"$root/${new java.io.File(dir).getName}/events"
+    val staged = StreamRun.scratch(s, dir, "events")
     val target = new java.io.File(staged, "events.parquet")
     if (!target.isFile) {
       target.getParentFile.mkdirs()
@@ -83,6 +66,22 @@ object TimeSeriesQueries {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     staged
+  }
+
+  /** events projected to the staged stream fixtures' row shape
+    * [[StreamingOps.KeyedEvent]]: (key, tsMillis, value). */
+  private def keyedEvents(s: SparkSession, dir: String): DataFrame =
+    events(s, dir).select(col("user_id").as("key"),
+      expr("ts div 1000000").as("tsMillis"), col("value"))
+
+  /** `ev` split into three files at the thirds of [lo, hi] on column
+    * `c`. */
+  private def thirds(ev: DataFrame, c: String, lo: Long,
+      hi: Long): Seq[DataFrame] = {
+    val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
+    Seq(ev.filter(col(c) <= lit(c1)),
+      ev.filter(col(c) > lit(c1) && col(c) <= lit(c2)),
+      ev.filter(col(c) > lit(c2)))
   }
 
   /** Stage the sessionize-stream fixture: events projected to
@@ -101,43 +100,17 @@ object TimeSeriesQueries {
     * anyway — closure depends only on per-key event order, and late
     * events coalesce by the same gap rule (StreamingOps.sessionize). */
   private def stagedSessionDir(s: SparkSession, dir: String,
-      gapMs: Long): String = {
-    val root = s"/tmp/graft_stream/${s.sparkContext.applicationId}"
-    val staged = s"$root/${new java.io.File(dir).getName}/sessfix"
-    val done = new java.io.File(staged, "_STAGED")
-    if (!done.isFile) {
-      stagedEventsDir(s, dir) // registers the shutdown-hook cleanup of root
-      val ev = events(s, dir).select(col("user_id").as("key"),
-        expr("ts div 1000000").as("tsMillis"), col("value"))
-      // one 2-long scalar agg for the time split — a driver step bounded
-      // like text_tfidf's corpus count, not a data collect
-      val mm = ev.agg(min(col("tsMillis")), max(col("tsMillis"))).head
-      val mid = Math.addExact(mm.getLong(0) / 2, mm.getLong(1) / 2)
-      val sentinels = ev.groupBy("key")
-        .agg((max(col("tsMillis")) + lit(gapMs * 10)).as("tsMillis"))
-        .select(col("key"), col("tsMillis"), lit(0.0).as("value"))
-      val parts = Seq(ev.filter(col("tsMillis") <= lit(mid)),
-        ev.filter(col("tsMillis") > lit(mid)), sentinels)
-      val base = System.currentTimeMillis() - 60000
-      parts.zipWithIndex.foreach { case (df, i) =>
-        val tmp = s"$staged/__tmp_$i"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(staged, f"$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(base + i * 1000L)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      done.createNewFile(): Unit
-    }
-    staged
+      gapMs: Long): String = StreamRun.stage(s, dir, "sessfix") {
+    val ev = keyedEvents(s, dir)
+    // one 2-long scalar agg for the time split — a driver step bounded
+    // like text_tfidf's corpus count, not a data collect
+    val mm = ev.agg(min(col("tsMillis")), max(col("tsMillis"))).head
+    val mid = Math.addExact(mm.getLong(0) / 2, mm.getLong(1) / 2)
+    val sentinels = ev.groupBy("key")
+      .agg((max(col("tsMillis")) + lit(gapMs * 10)).as("tsMillis"))
+      .select(col("key"), col("tsMillis"), lit(0.0).as("value"))
+    Seq(ev.filter(col("tsMillis") <= lit(mid)),
+      ev.filter(col("tsMillis") > lit(mid)), sentinels)
   }
 
   /** Stage the DELAYED-sessionize fixture (round-14): events projected
@@ -157,50 +130,19 @@ object TimeSeriesQueries {
   private def stagedDelayedSessionDir(s: SparkSession, dir: String,
       gapMs: Long, jMs: Long, lateMs: Long): String = {
     require(lateMs > 2 * jMs, "lateness must exceed the jitter disorder")
-    val root = s"/tmp/graft_stream/${s.sparkContext.applicationId}"
-    val staged = s"$root/${new java.io.File(dir).getName}/sessdelfix"
-    val done = new java.io.File(staged, "_STAGED")
-    if (!done.isFile) {
-      stagedEventsDir(s, dir) // registers the shutdown-hook cleanup
-      val ev = events(s, dir).select(col("user_id").as("key"),
-          expr("ts div 1000000").as("tsMillis"), col("value"))
+    StreamRun.stage(s, dir, "sessdelfix") {
+      val ev = keyedEvents(s, dir)
         .withColumn("__j", col("tsMillis") +
           pmod(xxhash64(col("key"), col("tsMillis")), lit(2 * jMs)) -
           lit(jMs))
       val mm = ev.agg(min(col("__j")), max(col("__j")),
         max(col("tsMillis"))).head
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val maxTs = mm.getLong(2)
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-      val s1 = maxTs + lateMs + gapMs + 2000L
+      val s1 = mm.getLong(2) + lateMs + gapMs + 2000L
       def sent(ts: Long) = ev.select(col("key")).distinct()
         .select(col("key"), lit(ts).as("tsMillis"), lit(0.0).as("value"))
-      val parts = Seq(
-        ev.filter(col("__j") <= lit(c1)).drop("__j"),
-        ev.filter(col("__j") > lit(c1) && col("__j") <= lit(c2))
-          .drop("__j"),
-        ev.filter(col("__j") > lit(c2)).drop("__j"),
-        sent(s1), sent(s1 + 1000L))
-      val base = System.currentTimeMillis() - 60000
-      parts.zipWithIndex.foreach { case (df, i) =>
-        val tmp = s"$staged/__tmp_$i"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(staged, f"$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(base + i * 1000L)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      done.createNewFile(): Unit
+      thirds(ev, "__j", mm.getLong(0), mm.getLong(1)).map(_.drop("__j")) ++
+        Seq(sent(s1), sent(s1 + 1000L))
     }
-    staged
   }
 
   /** Stage the trailing-window stream fixture: events projected to
@@ -213,41 +155,12 @@ object TimeSeriesQueries {
     * order across batches — the arrival-order contract under which
     * trailingW is exact (ties can't straddle a boundary: a tie shares
     * one ts, and the split is by ts). */
-  private def stagedTrailingDir(s: SparkSession, dir: String): String = {
-    val root = s"/tmp/graft_stream/${s.sparkContext.applicationId}"
-    val staged = s"$root/${new java.io.File(dir).getName}/trailfix"
-    val done = new java.io.File(staged, "_STAGED")
-    if (!done.isFile) {
-      stagedEventsDir(s, dir) // registers the shutdown-hook cleanup
-      val ev = events(s, dir).select(col("user_id").as("key"),
-        expr("ts div 1000000").as("tsMillis"), col("value"))
+  private def stagedTrailingDir(s: SparkSession, dir: String): String =
+    StreamRun.stage(s, dir, "trailfix") {
+      val ev = keyedEvents(s, dir)
       val mm = ev.agg(min(col("tsMillis")), max(col("tsMillis"))).head
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
-      val parts = Seq(ev.filter(col("tsMillis") <= lit(c1)),
-        ev.filter(col("tsMillis") > lit(c1) && col("tsMillis") <= lit(c2)),
-        ev.filter(col("tsMillis") > lit(c2)))
-      val base = System.currentTimeMillis() - 60000
-      parts.zipWithIndex.foreach { case (df, i) =>
-        val tmp = s"$staged/__tmp_$i"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(staged, f"$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(base + i * 1000L)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      done.createNewFile(): Unit
+      thirds(ev, "tsMillis", mm.getLong(0), mm.getLong(1))
     }
-    staged
-  }
 
   /** Stage the stream-stream JOIN fixture: (event_id, key, tsMillis)
     * split into three globally ts-ordered files (the stagedTrailingDir
@@ -263,13 +176,9 @@ object TimeSeriesQueries {
     * (negative keys match no real user and not each other), and their
     * own eviction point S1 + range sits above the final watermark, so
     * they never emit — the established sentinel-never-emits contract. */
-  private def stagedJoinDir(s: SparkSession, dir: String,
-      rangeMs: Long): String = {
-    val root = s"/tmp/graft_stream/${s.sparkContext.applicationId}"
-    val staged = s"$root/${new java.io.File(dir).getName}/ssjoinfix"
-    val done = new java.io.File(staged, "_STAGED")
-    if (!done.isFile) {
-      stagedEventsDir(s, dir) // registers the shutdown-hook cleanup
+  private def stagedJoinDir(s: SparkSession, dir: String): String =
+    StreamRun.stage(s, dir, "ssjoinfix") {
+      val rangeMs = 3600000L // the joins' ±1 h band
       // quarter of the events per side (mod-4 halves 0/1), with the
       // side STAGED as a column — sentinel rows then pick their side
       // explicitly instead of fighting Scala's negative-% semantics
@@ -280,37 +189,48 @@ object TimeSeriesQueries {
           (col("event_id") % 4).cast("int").as("side"))
       val mm = ev.agg(min(col("tsMillis")), max(col("tsMillis"))).head
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * ((hi - lo) / 3))
       import s.implicits._
       val sentinel = (ts: Long, gen: Int) => Seq(
         (-2L - 2 * gen, -1L, ts, 0), (-1L - 2 * gen, -2L, ts, 1))
         .toDF("event_id", "key", "tsMillis", "side")
       val s1 = hi + rangeMs + 2000L
-      val parts = Seq(ev.filter(col("tsMillis") <= lit(c1)),
-        ev.filter(col("tsMillis") > lit(c1) && col("tsMillis") <= lit(c2)),
-        ev.filter(col("tsMillis") > lit(c2)),
-        sentinel(s1, 0), sentinel(s1 + 1000L, 1))
-      val base = System.currentTimeMillis() - 60000
-      parts.zipWithIndex.foreach { case (df, i) =>
-        val tmp = s"$staged/__tmp_$i"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(staged, f"$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(base + i * 1000L)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      done.createNewFile(): Unit
+      thirds(ev, "tsMillis", lo, hi) ++
+        Seq(sentinel(s1, 0), sentinel(s1 + 1000L, 1))
     }
-    staged
+
+  /** The staged join fixture's two watermarked sides (1 s delay), read
+    * as two file streams over the same directory: left = side 0 as
+    * (l_id, key, l_ts), right = side 1 as (r_id, r_key, r_ts). */
+  private def joinSides(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types._
+    val schema = new StructType().add("event_id", LongType)
+      .add("key", LongType).add("tsMillis", LongType)
+      .add("side", IntegerType)
+    val srcDir = stagedJoinDir(s, dir)
+    def src = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val l = src.filter(col("side") === 0)
+      .select(col("event_id").as("l_id"), col("key"),
+        timestamp_millis(col("tsMillis")).as("l_ts"))
+      .withWatermark("l_ts", "1 second")
+    val r = src.filter(col("side") === 1)
+      .select(col("event_id").as("r_id"), col("key").as("r_key"),
+        timestamp_millis(col("tsMillis")).as("r_ts"))
+      .withWatermark("r_ts", "1 second")
+    (l, r)
   }
+
+  /** The ±1 h event-time band of the three outer stream-stream joins. */
+  private val joinBand = col("key") === col("r_key") &&
+    col("r_ts") >= col("l_ts") - expr("INTERVAL 1 HOUR") &&
+    col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR")
+
+  /** Arrival disorder of the OUT-OF-ORDER fixtures (2 h each way) and
+    * the lateness every _ooo key runs with: 2J + 1 s, so the engine's
+    * late filter provably drops nothing. */
+  private val OooJitterMs = 2L * 3600L * 1000L
+  private val OooLatenessMs = 2 * OooJitterMs + 1000L
 
   /** Stage the OUT-OF-ORDER trailing fixture (r07 verdict item 4): the
     * same (key, tsMillis, value) projection, but split into three files
@@ -327,67 +247,36 @@ object TimeSeriesQueries {
     * sentinels' own rows sit forever above the final watermark, so they
     * never emit — no sink filtering needed (the sessionize pattern). */
   private def stagedTrailingOooDir(s: SparkSession, dir: String,
-      jitterMs: Long, latenessMs: Long, tailMs: Long = 1000L,
-      tag: String = ""): String = {
-    val root = s"/tmp/graft_stream/${s.sparkContext.applicationId}"
-    val staged = s"$root/${new java.io.File(dir).getName}/trailooofix$tag"
-    val done = new java.io.File(staged, "_STAGED")
-    if (!done.isFile) {
-      stagedEventsDir(s, dir) // registers the shutdown-hook cleanup
-      val ev = events(s, dir).select(col("user_id").as("key"),
-        expr("ts div 1000000").as("tsMillis"), col("value"))
+      tailMs: Long = 1000L, tag: String = ""): String =
+    StreamRun.stage(s, dir, s"trailooofix$tag") {
+      val ev = keyedEvents(s, dir)
         .withColumn("arrival", col("tsMillis") +
           pmod(xxhash64(col("key"), col("tsMillis")),
-            lit(2 * jitterMs + 1)) - lit(jitterMs))
+            lit(2 * OooJitterMs + 1)) - lit(OooJitterMs))
       val mm = ev.agg(min(col("arrival")), max(col("arrival")),
         max(col("tsMillis"))).head
-      val (alo, ahi, hi) = (mm.getLong(0), mm.getLong(1), mm.getLong(2))
-      val (c1, c2) = (alo + (ahi - alo) / 3, alo + 2 * ((ahi - alo) / 3))
-      val data = Seq(ev.filter(col("arrival") <= lit(c1)),
-        ev.filter(col("arrival") > lit(c1) && col("arrival") <= lit(c2)),
-        ev.filter(col("arrival") > lit(c2))).map(_.drop("arrival"))
+      val hi = mm.getLong(2)
       val sentinel = (ts: Long) => ev.select(col("key")).distinct()
         .select(col("key"), lit(ts).as("tsMillis"), lit(0.0).as("value"))
       // tailMs sizes the final watermark: wm_final = S1 - lateness =
       // hi + tailMs, so a lookahead frame needs tailMs > afterMillis to
       // flush every real row
-      val parts = data ++ Seq(sentinel(hi + latenessMs + tailMs),
-        sentinel(hi + latenessMs + tailMs + 1000L))
-      val base = System.currentTimeMillis() - 60000
-      parts.zipWithIndex.foreach { case (df, i) =>
-        val tmp = s"$staged/__tmp_$i"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).get
-        val dst = new java.io.File(staged, f"$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dst.setLastModified(base + i * 1000L)
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }
-      done.createNewFile(): Unit
+      thirds(ev, "arrival", mm.getLong(0), mm.getLong(1))
+        .map(_.drop("arrival")) ++
+        Seq(sentinel(hi + OooLatenessMs + tailMs),
+          sentinel(hi + OooLatenessMs + tailMs + 1000L))
     }
-    staged
-  }
 
-  /** Stateful streaming executions keep state-store machinery per
-    * shuffle partition per micro-batch (a stream-stream join keeps
-    * FOUR stores per partition); at the session's 32 partitions that
-    * machinery — not the data — dominated every stateful key's cost
-    * (join_stream_stream_louter measured 19.4s → 6.2s at 8; round-9
-    * re-tune: 8 → 4 shaves another ~0.5s off each stream-stream outer
-    * join while 2 is flat — the remaining floor is per-micro-batch
-    * overhead, not per-partition stores). Scoping
-    * `spark.sql.shuffle.partitions` for the duration of the streaming
-    * run is the per-stream state-sizing knob a real deployment sets;
-    * results are partitioning-independent (the oracle gate re-proves it
-    * every round). Restored in finally — batch keys in the same session
-    * are untouched. */
+  /** The sink projections shared by the per-row window keys: trailing
+    * frames (count, exact e4 sum) and running frames (cumulative). */
+  private def winCols(sink: DataFrame): DataFrame =
+    sink.select(col("key").as("user_id"), col("tsMillis").as("ts_ms"),
+      col("winN").as("win_n"), col("winSumE4").as("win_sum_e4"))
+
+  private def cumCols(sink: DataFrame): DataFrame =
+    sink.select(col("key").as("user_id"), col("tsMillis").as("ts_ms"),
+      col("cumN").as("cum_n"), col("cumSumE4").as("cum_sum_e4"))
+
   /** Q30 fixed-point truncated-EWMA weights — the single shared
     * definition ([[graft.streaming.StreamingOps.EwmaQ30Weights]]),
     * embedded as the SAME integer literals in the streaming FIR op and
@@ -458,27 +347,9 @@ object TimeSeriesQueries {
       // ROWS BETWEEN 9 PRECEDING AND CURRENT ROW window ordered by
       // (ts_ms, v4) — the output multiset is tie-order invariant, which
       // is what the sorted-hash gate compares.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val srcDir = stagedTrailingDir(s, dir)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.trailingRowsW(src, nRows = 10)
-      val qn = s"graft_stream_rows_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("winN").as("win_n"),
-        col("winSumE4").as("win_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, StreamingOps.trailingRowsW(
+        StreamRun.keyed(s, stagedTrailingDir(s, dir)), nRows = 10).toDF())(
+        winCols)
     }),
     "window_stream_running" -> ((s, dir) => {
       // RUNNING aggregate on a stream — the degradation matrix's first
@@ -489,27 +360,8 @@ object TimeSeriesQueries {
       // UNBOUNDED PRECEDING range window. Same ts-ordered three-file
       // replay as window_stream_trailing (ties can't straddle a split:
       // the split is by ts), same exact scaled-integer sums.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val srcDir = stagedTrailingDir(s, dir)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.runningW(src)
-      val qn = s"graft_stream_running_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("cumN").as("cum_n"),
-        col("cumSumE4").as("cum_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, StreamingOps.runningW(
+        StreamRun.keyed(s, stagedTrailingDir(s, dir))).toDF())(cumCols)
     }),
     "window_stream_lookahead" -> ((s, dir) => {
       // FINITE POSITIVE TIME LOOKAHEAD on a stream — the last
@@ -521,33 +373,12 @@ object TimeSeriesQueries {
       // pins both the future-frame semantics AND their exactness under
       // disorder. Oracle = the batch range frame with a FOLLOWING
       // endpoint.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
       val after = 1800L * 1000L                   // +30 min lookahead
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness,
-        tailMs = after + 1000L, tag = "_la")
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.trailingWDelayed(
-        src, beforeMillis = 3600L * 1000L, latenessMillis = lateness,
-        afterMillis = after)
-      val qn = s"graft_stream_lookahead_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("winN").as("win_n"),
-        col("winSumE4").as("win_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      val src = StreamRun.keyed(s,
+        stagedTrailingOooDir(s, dir, tailMs = after + 1000L, tag = "_la"))
+      StreamRun.run(s, StreamingOps.trailingWDelayed(src,
+        beforeMillis = 3600L * 1000L, latenessMillis = OooLatenessMs,
+        afterMillis = after).toDF())(winCols)
     }),
     "window_stream_rows_ooo" -> ((s, dir) => {
       // Trailing N-ROWS frame under OUT-OF-ORDER arrival
@@ -558,30 +389,9 @@ object TimeSeriesQueries {
       // trailing 9 entries of the released prefix + the lateness
       // sliver. Same jitter-shuffled fixture as the other _ooo keys;
       // oracle = the batch ROWS frame ordered by (ts_ms, v4).
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.trailingRowsWDelayed(src,
-        nRows = 10, latenessMillis = lateness)
-      val qn = s"graft_stream_rows_ooo_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("winN").as("win_n"),
-        col("winSumE4").as("win_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, StreamingOps.trailingRowsWDelayed(
+        StreamRun.keyed(s, stagedTrailingOooDir(s, dir)), nRows = 10,
+        latenessMillis = OooLatenessMs).toDF())(winCols)
     }),
     "window_stream_running_lookahead" -> ((s, dir) => {
       // Running aggregate WITH a positive time lookahead on a stream —
@@ -592,32 +402,11 @@ object TimeSeriesQueries {
       // differ, see RunningDelayBuf). Same jitter-shuffled fixture as
       // window_stream_lookahead; oracle = the batch range frame with
       // UNBOUNDED PRECEDING and a FOLLOWING end.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
       val after = 1800L * 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness,
-        tailMs = after + 1000L, tag = "_la")
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.runningWDelayed(src,
-        latenessMillis = lateness, afterMillis = after)
-      val qn = s"graft_stream_run_la_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("cumN").as("cum_n"),
-        col("cumSumE4").as("cum_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      val src = StreamRun.keyed(s,
+        stagedTrailingOooDir(s, dir, tailMs = after + 1000L, tag = "_la"))
+      StreamRun.run(s, StreamingOps.runningWDelayed(src,
+        latenessMillis = OooLatenessMs, afterMillis = after).toDF())(cumCols)
     }),
     "window_stream_running_ooo" -> ((s, dir) => {
       // RUNNING aggregate under OUT-OF-ORDER arrival — the LAST
@@ -628,29 +417,9 @@ object TimeSeriesQueries {
       // its timestamp, so the emission is EXACT under the fixture's
       // 2×2h shuffle — gated against the very same unbounded-range
       // batch oracle as the ts-ordered running key.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.runningWDelayed(src, lateness)
-      val qn = s"graft_stream_running_ooo_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("cumN").as("cum_n"),
-        col("cumSumE4").as("cum_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, StreamingOps.runningWDelayed(
+        StreamRun.keyed(s, stagedTrailingOooDir(s, dir)),
+        OooLatenessMs).toDF())(cumCols)
     }),
     "join_stream_asof" -> ((s, dir) => {
       // Stream-stream AS-OF join — the temporal-join shape Structured
@@ -662,33 +431,18 @@ object TimeSeriesQueries {
       // against DuckDB's native ASOF LEFT JOIN over the same rows
       // (right side pre-aggregated to per-ts max, the operator's tie
       // rule) under the fixture's 2×2h shuffled arrival.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
       import s.implicits._
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
+      val src = StreamRun.keyed(s, stagedTrailingOooDir(s, dir)).toDF()
         .withColumn("isQuote",
           conv(substring(md5(concat(col("key").cast("string"), lit(":"),
             col("tsMillis").cast("string"))), 1, 15), 16, 10)
             .cast("long") % 4 === 0)
-        .as[graft.streaming.StreamingOps.TaggedEvent]
-      val agg = graft.streaming.StreamingOps.asofJoinWDelayed(src, lateness)
-      val qn = s"graft_stream_asof_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("valueE4").as("value_e4"),
-        col("quoteE4").as("quote_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+        .as[StreamingOps.TaggedEvent]
+      StreamRun.run(s,
+        StreamingOps.asofJoinWDelayed(src, OooLatenessMs).toDF()) {
+        _.select(col("key").as("user_id"), col("tsMillis").as("ts_ms"),
+          col("valueE4").as("value_e4"), col("quoteE4").as("quote_e4"))
+      }
     }),
     "stream_cusum_stateful" -> ((s, dir) => {
       // CUSUM drift detection on the OOO stream — the streaming twin
@@ -701,31 +455,13 @@ object TimeSeriesQueries {
       // identity in DuckDB on the same rows. Exact integers end to
       // end: scaledE4 values, integer allowance a=75.0 / threshold
       // h=200.0 (E4 units), integer drift predicate.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.cusumWDelayed(src,
+      StreamRun.run(s, StreamingOps.cusumWDelayed(
+        StreamRun.keyed(s, stagedTrailingOooDir(s, dir)),
         allowanceE4 = 750000L, thresholdE4 = 2000000L,
-        latenessMillis = lateness)
-      val qn = s"graft_stream_cusum_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("cusumE4").as("cusum_e4"),
-        col("isDrift").as("is_drift"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+        latenessMillis = OooLatenessMs).toDF()) {
+        _.select(col("key").as("user_id"), col("tsMillis").as("ts_ms"),
+          col("cusumE4").as("cusum_e4"), col("isDrift").as("is_drift"))
+      }
     }),
     "stream_topk_stateful" -> ((s, dir) => {
       // TOP-K heavy values per (user, 4h tumbling window) on the OOO
@@ -743,32 +479,15 @@ object TimeSeriesQueries {
       // (never emitted, so no sink filtering). Oracle = the batch
       // GROUP BY (user, window, value) + row_number ranking — exact
       // integers end to end (scaledE4 values, counts, ranks).
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
       val winMs = 4L * 3600L * 1000L
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness,
-        tailMs = winMs + 1000L, tag = "topk")
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.topkWDelayed(src,
-        windowMillis = winMs, k = 3, latenessMillis = lateness)
-      val qn = s"graft_stream_topk_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("winStartMillis").as("win_start_ms"), col("rank"),
-        col("valueE4").as("value_e4"), col("cnt"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      val src = StreamRun.keyed(s,
+        stagedTrailingOooDir(s, dir, tailMs = winMs + 1000L, tag = "topk"))
+      StreamRun.run(s, StreamingOps.topkWDelayed(src, windowMillis = winMs,
+        k = 3, latenessMillis = OooLatenessMs).toDF()) {
+        _.select(col("key").as("user_id"),
+          col("winStartMillis").as("win_start_ms"), col("rank"),
+          col("valueE4").as("value_e4"), col("cnt"))
+      }
     }),
     "stream_quantile_stateful" -> ((s, dir) => {
       // P50/P95 per (user, 4h tumbling window) on the OOO stream — the
@@ -783,32 +502,15 @@ object TimeSeriesQueries {
       // fixture verbatim (same jitter/lateness/tailMs → same dir): the
       // tail margin closes every real window while the sentinels' own
       // windows stay open forever.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
       val winMs = 4L * 3600L * 1000L
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness,
-        tailMs = winMs + 1000L, tag = "topk")
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.quantileWDelayed(src,
-        windowMillis = winMs, latenessMillis = lateness)
-      val qn = s"graft_stream_quant_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("winStartMillis").as("win_start_ms"), col("n"),
-        col("p50E4").as("p50_e4"), col("p95E4").as("p95_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      val src = StreamRun.keyed(s,
+        stagedTrailingOooDir(s, dir, tailMs = winMs + 1000L, tag = "topk"))
+      StreamRun.run(s, StreamingOps.quantileWDelayed(src,
+        windowMillis = winMs, latenessMillis = OooLatenessMs).toDF()) {
+        _.select(col("key").as("user_id"),
+          col("winStartMillis").as("win_start_ms"), col("n"),
+          col("p50E4").as("p50_e4"), col("p95E4").as("p95_e4"))
+      }
     }),
     "stream_ewma_stateful" -> ((s, dir) => {
       // Truncated EWMA per user on the OOO stream — the exponential
@@ -828,29 +530,12 @@ object TimeSeriesQueries {
       // no-float-dimension compare (bound: v4 ≤ 6·10⁶ on the fixture ×
       // Σw < 2³⁰ → < 7·10¹⁵). Reuses the trailing-OOO staged fixture
       // (2×2h shuffle in a 4h lateness, sentinel flush).
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val jitter = 2L * 3600L * 1000L
-      val lateness = 2 * jitter + 1000L
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.weightedRowsWDelayed(src,
-        weights = EwmaQWeights, latenessMillis = lateness)
-      val qn = s"graft_stream_ewma_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("firQ").as("ewma_q30"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, StreamingOps.weightedRowsWDelayed(
+        StreamRun.keyed(s, stagedTrailingOooDir(s, dir)),
+        weights = EwmaQWeights, latenessMillis = OooLatenessMs).toDF()) {
+        _.select(col("key").as("user_id"), col("tsMillis").as("ts_ms"),
+          col("firQ").as("ewma_q30"))
+      }
     }),
     "window_stream_trailing_ooo" -> ((s, dir) => {
       // The trailing per-row frame under OUT-OF-ORDER arrival — the
@@ -861,30 +546,10 @@ object TimeSeriesQueries {
       // lateness, per-key cross-batch buffer merge of genuinely
       // unsorted arrivals. Same exact scaled-integer sums — the stream
       // compare has no float dimension.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val jitter = 2L * 3600L * 1000L             // 2 h disorder each way
-      val lateness = 2 * jitter + 1000L           // covers 2J + 1 s margin
-      val srcDir = stagedTrailingOooDir(s, dir, jitter, lateness)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.trailingWDelayed(
-        src, beforeMillis = 3600L * 1000L, latenessMillis = lateness)
-      val qn = s"graft_stream_trailing_ooo_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("winN").as("win_n"),
-        col("winSumE4").as("win_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, StreamingOps.trailingWDelayed(
+        StreamRun.keyed(s, stagedTrailingOooDir(s, dir)),
+        beforeMillis = 3600L * 1000L,
+        latenessMillis = OooLatenessMs).toDF())(winCols)
     }),
     "window_stream_trailing" -> ((s, dir) => {
       // PER-ROW trailing range frame ON A STREAM — the reference's
@@ -900,28 +565,9 @@ object TimeSeriesQueries {
       // compare has no float dimension at all. Oracle = the batch
       // RANGE frame over millis — per-row trailing windows ARE what
       // range frames mean, so the two must agree row-for-row.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
-      val srcDir = stagedTrailingDir(s, dir)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val agg = graft.streaming.StreamingOps.trailingW(
-        src, beforeMillis = 3600L * 1000L)
-      val qn = s"graft_stream_trailing_${streamRuns.incrementAndGet()}"
-      val q = agg.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("tsMillis").as("ts_ms"), col("winN").as("win_n"),
-        col("winSumE4").as("win_sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, StreamingOps.trailingW(
+        StreamRun.keyed(s, stagedTrailingDir(s, dir)),
+        beforeMillis = 3600L * 1000L).toDF())(winCols)
     }),
     "window_tumbling_day" -> ((s, dir) => {
       // native tumbling window: window(ts, '1 day') — epoch-aligned
@@ -978,27 +624,21 @@ object TimeSeriesQueries {
       // windows above the end-of-stream watermark), so the run is
       // deterministic — no flakiness. The collected sink is an aggregate
       // bounded like a broadcast side (|users|×|days|), not raw events.
-      import org.apache.spark.sql.streaming.Trigger
       // FileStreamSource requires a DIRECTORY source; the fixture is a
-      // single flat file, so stage it into an appId-keyed scratch dir
-      // (same pattern + shutdown-hook cleanup as FormatQueries' round
-      // trips — the file is MB-scale fixture data, not a big copy)
+      // single flat file, so eventsStream stages it into the
+      // StreamRun.scratch tree (the file is MB-scale fixture data, not a
+      // big copy)
       val src = eventsStream(s, dir)
-      val agg = graft.streaming.StreamingOps.mutateStreamW(
+      val agg = StreamingOps.mutateStreamW(
         src.withColumn("tts", tts), "tts", watermark = "1 day",
         windowLen = "1 day", by = Seq(col("user_id")))(
         "n" -> count(lit(1)),
         "sum_v" -> sum(col("value").cast("decimal(8,4)")))
-      val qn = s"graft_stream_tumbling_${streamRuns.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("user_id"),
-        expr(s"unix_micros(window.start) div $UsPerDay").as("day"),
-        col("n"), r4(col("sum_v").cast("double")).as("sum_v"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, agg, "complete") {
+        _.select(col("user_id"),
+          expr(s"unix_micros(window.start) div $UsPerDay").as("day"),
+          col("n"), r4(col("sum_v").cast("double")).as("sum_v"))
+      }
     }),
     "window_stream_sliding" -> ((s, dir) => {
       // Streaming SLIDING-window aggregation run to completion — the
@@ -1008,23 +648,18 @@ object TimeSeriesQueries {
       // to the batch twin window_sliding_week). Complete mode again makes
       // the final memory-sink state the full aggregation — deterministic,
       // no watermark holdback.
-      import org.apache.spark.sql.streaming.Trigger
       val src = eventsStream(s, dir)
-      val agg = graft.streaming.StreamingOps.mutateStreamW(
+      val agg = StreamingOps.mutateStreamW(
         src.withColumn("tts", tts), "tts", watermark = "1 day",
         windowLen = "7 days", slide = Some("1 day"),
         by = Seq(col("user_id")))(
         "n" -> count(lit(1)), "avg_v" -> avg(col("value")))
-      val qn = s"graft_stream_sliding_${streamRuns.incrementAndGet()}"
-      val q = agg.writeStream.outputMode("complete").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("user_id"),
-        expr(s"unix_micros(window.start) div $UsPerDay").as("win_start_day"),
-        col("n"), r4(col("avg_v")).as("avg_v"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, agg, "complete") {
+        _.select(col("user_id"),
+          expr(s"unix_micros(window.start) div $UsPerDay")
+            .as("win_start_day"),
+          col("n"), r4(col("avg_v")).as("avg_v"))
+      }
     }),
     "dedup_stream_exact" -> ((s, dir) => {
       // Streaming exact dedup (dropDuplicatesWithinWatermark) run to
@@ -1037,20 +672,12 @@ object TimeSeriesQueries {
       // bounded fixture; production picks the real lateness horizon and
       // state expires with the watermark (the 100 TB/day contract plain
       // dropDuplicates can't give — see StreamingOps.dedupStream).
-      import org.apache.spark.sql.streaming.Trigger
       val src = eventsStream(s, dir)
-      val dd = graft.streaming.StreamingOps.dedupStream(
+      val dd = StreamingOps.dedupStream(
         src.withColumn("tts", tts), "tts", watermark = "3650 days",
         keys = Seq("user_id", "event_type"))
         .select(col("user_id"), col("event_type"))
-      val qn = s"graft_stream_dedup_${streamRuns.incrementAndGet()}"
-      val q = dd.writeStream.outputMode("append").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn)
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, dd)(identity)
     }),
     "sessionize_stream_stateful" -> ((s, dir) => {
       // STATEFUL streaming sessionization (flatMapGroupsWithState) run to
@@ -1064,29 +691,15 @@ object TimeSeriesQueries {
       // sessionization — same 30-min strict-> convention as
       // sessionize_gap, at millisecond granularity. State per key is
       // O(1); at 100 TB the state store scales with |active keys|.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
       val gapMs = 1800L * 1000L
-      val srcDir = stagedSessionDir(s, dir, gapMs)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val sessions = graft.streaming.StreamingOps.sessionize(src, gapMs)
-      val qn = s"graft_stream_sessionize_${streamRuns.incrementAndGet()}"
-      val q = sessions.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("startMillis").as("sess_start_ms"),
-        col("endMillis").as("sess_end_ms"),
-        col("nEvents").as("n"), r4(col("sumValue")).as("sum_v"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      val sessions = StreamingOps.sessionize(
+        StreamRun.keyed(s, stagedSessionDir(s, dir, gapMs)), gapMs)
+      StreamRun.run(s, sessions.toDF()) {
+        _.select(col("key").as("user_id"),
+          col("startMillis").as("sess_start_ms"),
+          col("endMillis").as("sess_end_ms"),
+          col("nEvents").as("n"), r4(col("sumValue")).as("sum_v"))
+      }
     }),
     "sessionize_stream_delayed" -> ((s, dir) => {
       // The WATERMARK-DETERMINISTIC sessionizer as an inventory key
@@ -1103,32 +716,17 @@ object TimeSeriesQueries {
       // sums (scaledE4 grid) keep the compare float-free; sentinel
       // sessions never emit (their end + gap sits above the final
       // watermark), so the sink needs no filtering.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      import s.implicits._
       val gapMs = 2592000000L        // 30 days
       val jMs = 5L * 86400000L       // +-5 days arrival jitter
       val lateMs = 11L * 86400000L   // watermark delay > 2*jitter
-      val srcDir = stagedDelayedSessionDir(s, dir, gapMs, jMs, lateMs)
-      val schema = new StructType().add("key", LongType)
-        .add("tsMillis", LongType).add("value", DoubleType)
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .as[graft.streaming.StreamingOps.KeyedEvent]
-      val sessions = graft.streaming.StreamingOps.sessionizeDelayed(
-        src, gapMs, lateMs)
-      val qn = s"graft_stream_sessdel_${streamRuns.incrementAndGet()}"
-      val q = sessions.toDF().writeStream.outputMode("append")
-        .format("memory").queryName(qn)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn).select(col("key").as("user_id"),
-        col("startMillis").as("sess_start_ms"),
-        col("endMillis").as("sess_end_ms"),
-        col("nEvents").as("n"), col("sumE4").as("sum_e4"))
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      val sessions = StreamingOps.sessionizeDelayed(StreamRun.keyed(s,
+        stagedDelayedSessionDir(s, dir, gapMs, jMs, lateMs)), gapMs, lateMs)
+      StreamRun.run(s, sessions.toDF()) {
+        _.select(col("key").as("user_id"),
+          col("startMillis").as("sess_start_ms"),
+          col("endMillis").as("sess_end_ms"),
+          col("nEvents").as("n"), col("sumE4").as("sum_e4"))
+      }
     }),
     "join_stream_static" -> ((s, dir) => {
       // STREAM-STATIC join run to completion — the enrichment pattern
@@ -1139,21 +737,13 @@ object TimeSeriesQueries {
       // cheapest join a 100 TB/day stream can do — dimension lookups
       // never shuffle the stream. Appended sink = the plain batch join,
       // which IS the oracle.
-      import org.apache.spark.sql.streaming.Trigger
       val dim = events(s, dir).groupBy("user_id")
         .agg(r4(avg(col("value"))).as("user_mean"))
       val src = eventsStream(s, dir)
       val joined = src.join(broadcast(dim), Seq("user_id"))
         .select(col("event_id"), col("user_id"), col("user_mean"),
           r4(col("value") - col("user_mean")).as("delta"))
-      val qn = s"graft_stream_static_${streamRuns.incrementAndGet()}"
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn)
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, joined)(identity)
     }),
     "join_stream_scd2" -> ((s, dir) => {
       // SCD2-VERSIONED stream enrichment — the temporal dimension
@@ -1173,7 +763,6 @@ object TimeSeriesQueries {
       // the planted-twin convention; keys without history surface
       // NULL status through the LEFT join). Oracle = the identical
       // batch LEFT join over the recomputed history.
-      import org.apache.spark.sql.streaming.Trigger
       val log = QueryUtil.t(s, dir, "orders").select(col("o_custkey"),
         col("o_orderkey"), col("o_orderdate"), col("o_orderstatus"))
       val dim = graft.operators.Scd2.intervals(log,
@@ -1192,14 +781,7 @@ object TimeSeriesQueries {
             (col("vt").isNull || col("d") < col("vt")), "left")
         .select(col("event_id"), col("ck"),
           col("d").cast("string").as("event_day"), col("status"))
-      val qn = s"graft_stream_scd2_${streamRuns.incrementAndGet()}"
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn)
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, joined)(identity)
     }),
     "join_stream_stream" -> ((s, dir) => {
       // STREAM-STREAM inner join run to completion — the one streaming
@@ -1212,7 +794,6 @@ object TimeSeriesQueries {
       // join exactly — production would run a tight delay and trade
       // late matches for bounded state; the range condition (not the
       // watermark) is what lets Spark evict either side's buffer.
-      import org.apache.spark.sql.streaming.Trigger
       val l = eventsStream(s, dir)
         .filter(col("event_id") % 2 === 0)
         .select(col("event_id").as("l_id"), col("user_id"),
@@ -1227,14 +808,7 @@ object TimeSeriesQueries {
           col("r_ts") >= col("l_ts") - expr("INTERVAL 1 HOUR") &&
           col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"))
         .select(col("l_id"), col("user_id"), col("r_id"))
-      val qn = s"graft_stream_stream_${streamRuns.incrementAndGet()}"
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn)
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, joined)(identity)
     }),
     "join_stream_stream_louter" -> ((s, dir) => {
       // Stream-stream LEFT-OUTER join — the semantics inner join can't
@@ -1252,30 +826,12 @@ object TimeSeriesQueries {
       // State-store note: a streaming join keeps four state stores per
       // shuffle partition per micro-batch; at 32 partitions × 5
       // batches the store machinery dwarfed the data (19s at sf0.1) —
-      // scoping shuffle.partitions to 8 for this query is the knob a
-      // real deployment would tune per-stream (state cost scales with
-      // partitions, not rows, at this volume).
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      val rangeMs = 3600000L
-      val srcDir = stagedJoinDir(s, dir, rangeMs)
-      val schema = new StructType().add("event_id", LongType)
-        .add("key", LongType).add("tsMillis", LongType)
-        .add("side", IntegerType)
-      def src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val l = src.filter(col("side") === 0)
-        .select(col("event_id").as("l_id"), col("key"),
-          timestamp_millis(col("tsMillis")).as("l_ts"))
-        .withWatermark("l_ts", "1 second")
-      val r = src.filter(col("side") === 1)
-        .select(col("event_id").as("r_id"), col("key").as("r_key"),
-          timestamp_millis(col("tsMillis")).as("r_ts"))
-        .withWatermark("r_ts", "1 second")
-      val joined = l.join(r, col("key") === col("r_key") &&
-          col("r_ts") >= col("l_ts") - expr("INTERVAL 1 HOUR") &&
-          col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"),
-          "leftOuter")
+      // scoping shuffle.partitions to StreamShufflePartitions (4, see
+      // withStreamParts) is the knob a real deployment would tune
+      // per-stream (state cost scales with partitions, not rows, at
+      // this volume).
+      val (l, r) = joinSides(s, dir)
+      val joined = l.join(r, joinBand, "leftOuter")
         // NO key-sign "sentinel guard" filter here: sentinels never
         // emit by construction (their eviction point sits above the
         // final watermark), and a `key >= 0` filter is actively fatal —
@@ -1287,16 +843,7 @@ object TimeSeriesQueries {
         // the free win; on watermark-carrying rows it's a correctness
         // hazard.
         .select(col("l_id"), col("key").as("user_id"), col("r_id"))
-      val qn = s"graft_ss_louter_${streamRuns.incrementAndGet()}"
-      // shuffle.partitions scoping comes from the StatefulStreamKeys
-      // wrapper (see withStreamParts)
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn)
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, joined)(identity)
     }),
     "join_stream_stream_fouter" -> ((s, dir) => {
       // Stream-stream FULL-OUTER join — BOTH directions of the louter
@@ -1309,37 +856,11 @@ object TimeSeriesQueries {
       // watermark, so they never emit). Same pushdown hazard applies:
       // no post-join filters — see the louter key's note. Oracle: the
       // plain batch FULL JOIN; user_id coalesces across sides.
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      val rangeMs = 3600000L
-      val srcDir = stagedJoinDir(s, dir, rangeMs)
-      val schema = new StructType().add("event_id", LongType)
-        .add("key", LongType).add("tsMillis", LongType)
-        .add("side", IntegerType)
-      def src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val l = src.filter(col("side") === 0)
-        .select(col("event_id").as("l_id"), col("key"),
-          timestamp_millis(col("tsMillis")).as("l_ts"))
-        .withWatermark("l_ts", "1 second")
-      val r = src.filter(col("side") === 1)
-        .select(col("event_id").as("r_id"), col("key").as("r_key"),
-          timestamp_millis(col("tsMillis")).as("r_ts"))
-        .withWatermark("r_ts", "1 second")
-      val joined = l.join(r, col("key") === col("r_key") &&
-          col("r_ts") >= col("l_ts") - expr("INTERVAL 1 HOUR") &&
-          col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"),
-          "fullOuter")
+      val (l, r) = joinSides(s, dir)
+      val joined = l.join(r, joinBand, "fullOuter")
         .select(col("l_id"),
           coalesce(col("key"), col("r_key")).as("user_id"), col("r_id"))
-      val qn = s"graft_ss_fouter_${streamRuns.incrementAndGet()}"
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn)
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, joined)(identity)
     }),
     "join_stream_stream_router" -> ((s, dir) => {
       // Stream-stream RIGHT-OUTER join (round 17, r16 verdict item 6)
@@ -1351,36 +872,10 @@ object TimeSeriesQueries {
       // fixture and pushdown hazard as the louter/fouter keys — no
       // post-join filters. Oracle: the plain batch RIGHT JOIN;
       // user_id comes from the right side (always present).
-      import org.apache.spark.sql.streaming.Trigger
-      import org.apache.spark.sql.types._
-      val rangeMs = 3600000L
-      val srcDir = stagedJoinDir(s, dir, rangeMs)
-      val schema = new StructType().add("event_id", LongType)
-        .add("key", LongType).add("tsMillis", LongType)
-        .add("side", IntegerType)
-      def src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-      val l = src.filter(col("side") === 0)
-        .select(col("event_id").as("l_id"), col("key"),
-          timestamp_millis(col("tsMillis")).as("l_ts"))
-        .withWatermark("l_ts", "1 second")
-      val r = src.filter(col("side") === 1)
-        .select(col("event_id").as("r_id"), col("key").as("r_key"),
-          timestamp_millis(col("tsMillis")).as("r_ts"))
-        .withWatermark("r_ts", "1 second")
-      val joined = l.join(r, col("key") === col("r_key") &&
-          col("r_ts") >= col("l_ts") - expr("INTERVAL 1 HOUR") &&
-          col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"),
-          "rightOuter")
+      val (l, r) = joinSides(s, dir)
+      val joined = l.join(r, joinBand, "rightOuter")
         .select(col("l_id"), col("r_key").as("user_id"), col("r_id"))
-      val qn = s"graft_ss_router_${streamRuns.incrementAndGet()}"
-      val q = joined.writeStream.outputMode("append").format("memory")
-        .queryName(qn).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sink = s.table(qn)
-      val out = s.createDataFrame(sink.collectAsList(), sink.schema)
-      s.catalog.dropTempView(qn)
-      out
+      StreamRun.run(s, joined)(identity)
     }),
     "stream_sink_idempotent" -> ((s, dir) => {
       // foreachBatch EXACTLY-ONCE parquet sink: each micro-batch
@@ -1393,39 +888,17 @@ object TimeSeriesQueries {
       // added nothing.
       import org.apache.spark.sql.streaming.Trigger
       import org.apache.spark.sql.types._
-      val root = s"/tmp/graft_stream/${s.sparkContext.applicationId}"
-      val outDir =
-        s"$root/${new java.io.File(dir).getName}/idemsink_${streamRuns.incrementAndGet()}"
+      val outDir = StreamRun.scratch(s, dir,
+        s"idemsink_${StreamRun.nextId()}")
       // three staged files (mod-3 split) → with maxFilesPerTrigger=1,
       // THREE real micro-batches with distinct batch ids — so the
       // batch-id-keyed directory contract is actually exercised (a sink
       // that ignored the id and overwrote one directory would lose two
       // batches and fail the row-count gate)
-      val staged = s"$root/${new java.io.File(dir).getName}/idemsrc"
-      val done = new java.io.File(staged, "_STAGED")
-      if (!done.isFile) {
-        stagedEventsDir(s, dir) // registers the shutdown-hook cleanup
+      val staged = StreamRun.stage(s, dir, "idemsrc") {
         val ev = events(s, dir)
           .select(col("event_id"), col("user_id"), col("value"))
-        val base = System.currentTimeMillis() - 60000
-        (0 until 3).foreach { i =>
-          val tmp = s"$staged/__tmp_$i"
-          ev.filter(col("event_id") % 3 === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .find(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(staged, f"$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(base + i * 1000L)
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(): Unit
-          }
-          rm(new java.io.File(tmp))
-        }
-        done.createNewFile(): Unit
+        (0 until 3).map(i => ev.filter(col("event_id") % 3 === i))
       }
       val schema = new StructType().add("event_id", LongType)
         .add("user_id", LongType).add("value", DoubleType)

@@ -17,10 +17,13 @@ class RollingDistinctSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  private def naive(rows: Seq[(Long, Long)], w: Int): Map[Long, Long] = {
+  /** COUNT(DISTINCT id) over each trailing window of the span; a NULL
+    * id is no value, but its bucket still belongs to the span. */
+  private def naive(rows: Seq[(Option[Long], Long)],
+      w: Int): Map[Long, Long] = {
     val lo = rows.map(_._2).min; val hi = rows.map(_._2).max
     (lo to hi).map { d =>
-      d -> rows.collect { case (id, b) if b <= d && b > d - w => id }
+      d -> rows.collect { case (Some(id), b) if b <= d && b > d - w => id }
         .distinct.size.toLong
     }.toMap
   }
@@ -29,7 +32,7 @@ class RollingDistinctSpec extends AnyFunSuite {
     val gen = for {
       n <- Gen.choose(1, 60); w <- Gen.choose(1, 9)
       rows <- Gen.listOfN(n, for {
-        id <- Gen.choose(0L, 7L); b <- Gen.choose(100L, 130L)
+        id <- Gen.option(Gen.choose(0L, 7L)); b <- Gen.choose(100L, 130L)
       } yield (id, b))
     } yield (rows, w)
     check(forAll(gen) { case (rows, w) =>
@@ -45,7 +48,8 @@ class RollingDistinctSpec extends AnyFunSuite {
       n <- Gen.choose(1, 60); w <- Gen.choose(1, 9)
       rows <- Gen.listOfN(n, for {
         // null is one more group, as in window semantics
-        g <- Gen.oneOf("x", "y", "z", null); id <- Gen.choose(0L, 7L)
+        g <- Gen.oneOf("x", "y", "z", null)
+        id <- Gen.option(Gen.choose(0L, 7L))
         b <- Gen.choose(100L, 130L)
       } yield (g, id, b))
     } yield (rows, w)
