@@ -5,7 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** The one local session every main and the test suite start from:
   * `local[cores]` with the library's `GraftExtensions`, shuffle
   * partitions = `cores`, UTC, no UI, a fresh temp warehouse dir and
-  * log level WARN. Callers that pin plan shapes (the fingerprint
+  * log level WARN. The state-store coordinator's snapshot-lag report is
+  * off: its "Snapshot Lag Report" WARNs flag the state stores of short
+  * local stream runs and were most of a stream run's log (625 of
+  * StreamCorrectness's 851 lines). Callers that pin plan shapes (the fingerprint
   * ledgers, plan dumps, tests) pass 4; everything else takes the
   * default. A caller that needs one different conf sets it on the
   * returned session. */
@@ -21,6 +24,8 @@ object LocalSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.streaming.stateStore." +
+        "coordinatorReportSnapshotUploadLag", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()

@@ -338,7 +338,7 @@ object ScaleProbe {
     // the linear layout can't serve. Footer min/max pruning follows file
     // locality, so this is the measurable form of the pruning win.
     locally {
-      val zroot = s"/tmp/graft_zorder_probe_${spark.sparkContext.applicationId}"
+      val zroot = graft.queries.QueryUtil.scratchRoot(spark, "zorder_probe")
       val base = spark.range(n).select(col("id"),
           pmod(xxhash64(col("id")), lit(1024)).as("a"),
           pmod(xxhash64(col("id"), lit(7)), lit(1024)).as("b"))
@@ -359,11 +359,6 @@ object ScaleProbe {
         println(s"[probe]   files holding b in [100,132): " +
           s"z-order $zHit/64, linear-by-A $lHit/64")
       }
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(zroot))
     }
 
     // token-window chunking: pure narrow ops — the probe pins the

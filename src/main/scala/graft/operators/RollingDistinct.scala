@@ -118,29 +118,7 @@ object RollingDistinct {
         lit(0).as("__sp"): _*))
       .groupBy(byd: _*)
       .agg(aggs.head, aggs.tail: _*)
-    // SHARED MATERIALIZATION (round 18): GlobalWindow's two-pass
-    // scaffold consumes its input through a plan diamond (the local
-    // sweep window AND the per-(group, pid) offset aggregate), and the
-    // branches' diverging column pruning makes their exchanges
-    // canonicalize UNEQUAL — the whole upstream lowering (scan →
-    // distinct pairs → lag → explode → merge aggregate) was computed
-    // TWICE per frame (verified in the r17/r18 executed plans: two
-    // full subtrees, no ReusedExchange; an explicit shared repartition
-    // was tried first and pruning still split it). A LAZY localCheckpoint
-    // truncates the plan at the merged frame so both branches scan ONE
-    // stored copy. That frame holds one row per spine bucket plus one
-    // per delta-only bucket: on an observed spine at most the observed
-    // buckets and their age-out buckets, on a dense spine each group's
-    // FULL span — up to `maxBucketSpan` rows per group.
-    // Lazy (eager=false): the first action — GlobalWindow's own bounds
-    // sampling at construction — materializes it; RDD-level blocks are
-    // released by ContextCleaner once the query's RDDs are unreachable
-    // (unlike a CacheManager persist, which pins until unpersist).
-    // Same cluster-reliability trade as the SuffixArray/Dedup
-    // checkpoints (documented there): on a real cluster, reliable
-    // checkpoint.
-    val shared = merged.localCheckpoint(false)
-    GlobalWindow.groupedCumSumsLong(shared, by, Seq(col("__d")), payload)
+    GlobalWindow.groupedCumSumsLong(merged, by, Seq(col("__d")), payload)
       .filter(col("__sp") === 1).drop("__sp")
   }
 
@@ -257,9 +235,10 @@ object RollingDistinct {
     * is claimed for ANY atomic type, and an eager cast("long") would
     * conflate distinct non-integral values (1.2 and 1.7 both → 1) or
     * ANSI-throw on strings; the sum carrier casts AFTER the distinct
-    * pass. Output as [[running]]. */
+    * pass, and rides only when `sumCol` is given. Output as [[running]]. */
   private def cumulative(df: DataFrame, by: Seq[String], valueCol: String,
-      bucket: Column, spineSrc: DataFrame): DataFrame = {
+      bucket: Column, spineSrc: DataFrame,
+      sumCol: Option[String]): DataFrame = {
     val byCols = by.map(col)
     val deltas = df
       .select(byCols :+ col(valueCol).as("__v") :+ bucket.as("__b"): _*)
@@ -267,8 +246,8 @@ object RollingDistinct {
       .distinct()
       .groupBy(byCols :+ col("__v"): _*)
       .agg(min(col("__b")).as("__d"))
-      .select(byCols :+ col("__d") :+ lit(1L).as("__dc") :+
-        sumCarrier(df, valueCol, col("__v")).as("__dv"): _*)
+      .select(byCols ++ Seq(col("__d"), lit(1L).as("__dc")) ++
+        sumCol.map(_ => sumCarrier(df, valueCol, col("__v")).as("__dv")): _*)
     running(spine(spineSrc, by, bucket, dense = false), deltas, by)
   }
 
@@ -284,10 +263,14 @@ object RollingDistinct {
     * non-null row's frame INCLUDES them — fall out of the sentinel
     * sorting below every real bucket. `spineFrom` (default `df`)
     * decides which buckets get output rows: each group's observed
-    * buckets, plus the sentinel row for groups with null-bucket rows. */
+    * buckets, plus the sentinel row for groups with null-bucket rows.
+    * The sum rides only when `sumCol` is given: a count-only caller
+    * neither pays for it nor overflows int64 summing large ids (64-bit
+    * hashes) it never reads. Output: (by..., bucketCol, cntCol[,
+    * sumCol]). */
   def groupedCumulativeDistinctSum(df: DataFrame, by: Seq[String],
       valueCol: String, bucketCol: String,
-      cntCol: String, sumCol: String,
+      cntCol: String, sumCol: Option[String],
       spineFrom: Option[DataFrame] = None): DataFrame = {
     val SENT = Long.MinValue
     // in-band sentinel safety (r13 ADVICE): a LEGITIMATE bucket equal
@@ -303,12 +286,12 @@ object RollingDistinct {
           "order key")).cast("long"))
         .otherwise(c), lit(SENT))
     }
-    cumulative(df, by, valueCol, bucket, spineFrom.getOrElse(df))
-      .select(by.map(col) :+
+    cumulative(df, by, valueCol, bucket, spineFrom.getOrElse(df), sumCol)
+      .select(by.map(col) ++ Seq(
         when(col("__d") === SENT, lit(null).cast("long"))
-          .otherwise(col("__d")).as(bucketCol) :+
-        col("__cc").cast("long").as(cntCol) :+
-        col("__cv").cast("long").as(sumCol): _*)
+          .otherwise(col("__d")).as(bucketCol),
+        col("__cc").cast("long").as(cntCol)) ++
+        sumCol.map(col("__cv").cast("long").as(_)): _*)
   }
 
   /** The NULLS LAST sibling of [[groupedCumulativeDistinctSum]] (r14
@@ -329,18 +312,19 @@ object RollingDistinct {
     * its rows decide which buckets get output rows AND which groups
     * have a null peer group, and the null-arm totals aggregate over it
     * (distinct aggregates skip null values, so extra null-value rows
-    * relative to `df` cannot change the totals). */
+    * relative to `df` cannot change the totals). The sum rides only when
+    * `sumCol` is given, in both arms. */
   def groupedCumulativeDistinctSumNullsLast(df: DataFrame, by: Seq[String],
       valueCol: String, bucketCol: String,
-      cntCol: String, sumCol: String,
+      cntCol: String, sumCol: Option[String],
       spineFrom: Option[DataFrame] = None): DataFrame = {
     val byCols = by.map(col)
     val spineSrc = spineFrom.getOrElse(df)
     val nonNullArm = cumulative(df, by, valueCol,
-        col(bucketCol).cast("long"), spineSrc)
-      .select(byCols :+ col("__d").as(bucketCol) :+
-        col("__cc").cast("long").as(cntCol) :+
-        col("__cv").cast("long").as(sumCol): _*)
+        col(bucketCol).cast("long"), spineSrc, sumCol)
+      .select(byCols ++ Seq(col("__d").as(bucketCol),
+        col("__cc").cast("long").as(cntCol)) ++
+        sumCol.map(col("__cv").cast("long").as(_)): _*)
 
     // whole-partition totals for groups that HAVE a null peer group;
     // groupBy(Nil) is the global-aggregate case, so by = Nil needs no
@@ -349,12 +333,12 @@ object RollingDistinct {
     // rewrite's generated __rd_* names are parse-safe, but a direct
     // caller with a column name needing backticks (spaces, dots) would
     // get a parse error — or silently resolve the wrong column
+    val nullAggs = sumCol.map(sum_distinct(
+        sumCarrier(spineSrc, valueCol, col(valueCol))).cast("long").as(_))
+      .toSeq :+ max(when(col(bucketCol).isNull, lit(1)).otherwise(lit(0)))
+      .as("__hasnull")
     val nullArm = spineSrc.groupBy(byCols: _*)
-      .agg(count_distinct(col(valueCol)).as(cntCol),
-        sum_distinct(sumCarrier(spineSrc, valueCol, col(valueCol)))
-          .cast("long").as(sumCol),
-        max(when(col(bucketCol).isNull, lit(1)).otherwise(lit(0)))
-          .as("__hasnull"))
+      .agg(count_distinct(col(valueCol)).as(cntCol), nullAggs: _*)
       .filter(col("__hasnull") === 1)
       .withColumn(bucketCol, lit(null).cast("long"))
       .select(nonNullArm.columns.map(col): _*)

@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
   *   3. global rank() of the pass key over the DISTINCT-key table
   *      (`groupBy(key).count`, map-side combine absorbs tie-group
   *      skew), then join back — adaptively one-task + broadcast for
-  *      small key tables, [[GlobalWindow.cumSumLong]] range-partitioned
-  *      sweep + shuffle join at scale (see [[rankPass]]).
+  *      small key tables, [[GlobalWindow.cumSumLong]]'s segmented scan
+  *      over a range exchange + shuffle join at scale (see [[rankPass]]).
   * Convergence is detected from the tie-group maximum (a 1-row driver
   * scalar per pass, the iterative-algorithm analogue of Dedup's label
   * propagation probe); ONE `localCheckpoint(true)` after the last pass
@@ -79,8 +79,9 @@ object SuffixArray {
     *   - small key table (<= [[BroadcastRankRows]] keys): one-task
     *     running sum over the keys + BROADCAST
     *     hash join back — the big frame is never shuffled at all;
-    *   - large key table: [[GlobalWindow.cumSumLong]] range-partitioned
-    *     sweep + shuffle join — no single-partition exchange at scale.
+    *   - large key table: [[GlobalWindow.cumSumLong]]'s segmented scan
+    *     over a range exchange + shuffle join — no single-partition
+    *     exchange at scale.
     * The choice is per pass, from the same 1-row stats job that feeds
     * the convergence probe, so a 100 TB corpus takes the sweep on early
     * passes and may legitimately drop to the broadcast path as tie

@@ -31,11 +31,10 @@ object AuditInventory {
 
   /** Declared-intentional Warn/Error findings, key → allowed rule ids.
     *
-    * Two families of exceptions remain (PlanAudit itself recognizes the
-    * other two statically — 1-row-aggregate broadcast sides downgrade
-    * to `bnl_scalar`/Info and GlobalWindow's own offsets fold to
-    * `global_window_offsets`/Info — so those shapes need no allow and a
-    * regression to a genuinely unbounded form still Warns):
+    * Two families of exceptions remain (PlanAudit itself recognizes
+    * 1-row-aggregate broadcast sides statically — they downgrade to
+    * `bnl_scalar`/Info, so that shape needs no allow and a regression to
+    * a genuinely unbounded form still Warns):
     *
     *  - ANN exact baselines (`bnl_join`): the brute-force cosine top-k
     *    keys are DECLARED O(n²) oracles for the IVF/PQ/LSH scale paths

@@ -85,23 +85,10 @@ object PlanAudit {
                 "for a real table — check the broadcast side is O(1) " +
                 "rows", cls)
         case w: WindowExec if w.partitionSpec.isEmpty =>
-          // GlobalWindow's OWN offsets fold — the exclusive prefix walk
-          // over the O(G×P) per-partition partials, recognizable by its
-          // `__gw_pid__` order key — is the rewrite this rule tells you
-          // to use; flagging it as a hazard would force every rewritten
-          // key to carry an allow() that could then mask a regression
-          // back to a genuinely data-sized global window
-          if (w.orderSpec.exists(_.child.references
-              .exists(_.name.contains("__gw_pid__"))))
-            all += Finding("global_window_offsets", Info,
-              "unpartitioned window over GlobalWindow's per-partition " +
-                "offsets frame (O(partitions) rows) — the two-pass " +
-                "rewrite's own bounded fold", cls)
-          else
-            all += Finding("global_window", Warn,
-              "window without partitionBy: the whole dataset sorts " +
-                "into ONE task; use GlobalWindow's two-pass rewrite " +
-                "for global running aggregates", cls)
+          all += Finding("global_window", Warn,
+            "window without partitionBy: the whole dataset sorts " +
+              "into ONE task; use GlobalWindow's segmented scan " +
+              "for global running aggregates", cls)
         case other =>
           val s = other.simpleStringWithNodeId()
           if (s.contains("UDF") && cls.contains("Project"))

@@ -469,7 +469,7 @@ case class RollingDistinctRewrite(spark: SparkSession)
     val groupNames = scala.collection.mutable.Map.empty[Sig, (String, String)]
     val outNames = targets.map { t =>
       val sig = sigOf(t)
-      val needsSum = t.nPreceding.isEmpty ||
+      val needsSum =
         targets.exists(o => sigOf(o) == sig && o.kind != CntKind)
       if (groupNames.contains(sig)) groupNames(sig)
       else {
@@ -531,7 +531,7 @@ case class RollingDistinctRewrite(spark: SparkSession)
             .groupedCumulativeDistinctSumNullsLast(
               proj.filter(col(idName).isNotNull), by = gNames,
               valueCol = idName, bucketCol = bName,
-              cntCol = cntName, sumCol = sumName,
+              cntCol = cntName, sumCol = Some(sumName).filter(_ => needsSum),
               spineFrom = Some(widened(proj)))
         case None =>
           // UNBOUNDED PRECEDING (the default frame — cumulative
@@ -544,7 +544,7 @@ case class RollingDistinctRewrite(spark: SparkSession)
           graft.operators.RollingDistinct.groupedCumulativeDistinctSum(
             proj.filter(col(idName).isNotNull), by = gNames,
             valueCol = idName, bucketCol = bName,
-            cntCol = cntName, sumCol = sumName,
+            cntCol = cntName, sumCol = Some(sumName).filter(_ => needsSum),
             spineFrom = Some(widened(proj)))
         case Some(nPrec) =>
           // count-only signatures carry no sum: they neither pay for it

@@ -1130,10 +1130,10 @@ object ExtendedQueries {
     "order_global_cumsum" -> ((s, dir) => {
       // GLOBAL cumulative sum — reference path 2 (frame, no .by) at real
       // size. window_noby_frame shows the semantics on 25 rows; THIS is
-      // the scale path: operators/GlobalWindow range-repartitions on the
-      // order keys, local-sweeps each partition, and broadcast-joins P
-      // per-partition offsets — no single-partition WindowExec (the plan
-      // Spark warns about). l_quantity is integer-valued, so the
+      // the scale path: operators/GlobalWindow range-partitions on the
+      // order keys and sweeps each partition from the carry of the ones
+      // before it — no single-partition WindowExec (the plan Spark warns
+      // about). l_quantity is integer-valued, so the
       // reassociated partitioned sum is bit-exact vs the oracle's
       // sequential one.
       graft.operators.GlobalWindow.cumSum(
@@ -1145,9 +1145,9 @@ object ExtendedQueries {
           col("l_suppkey"), col("cum_qty"))
     }),
     "order_global_cummax" -> ((s, dir) => {
-      // running MAX via the generalized two-pass algebra: local per-range
-      // running max ⊕ greatest of whole preceding ranges — same plan
-      // shape as the cumsum rewrite, exact (max is order-insensitive, no
+      // running MAX via the generalized segmented scan: a partition's
+      // running max ⊕ the max carried from the ranges before it — same
+      // plan shape as the cumsum, exact (max is order-insensitive, no
       // float reassociation caveat)
       graft.operators.GlobalWindow.groupedCumAgg(
           t(s, dir, "lineitem"), by = Nil,
@@ -1161,12 +1161,13 @@ object ExtendedQueries {
     "order_cumsum_scaled" -> ((s, dir) => {
       // GROUPED running sum for FEW-HOT-GROUPS data: order_cumsum's
       // semantics (cumulative qty per l_returnflag) but parallelism
-      // G×P instead of G — Window.partitionBy over a 3-value flag runs
+      // of the range partitions instead of G — Window.partitionBy over a 3-value flag runs
       // the whole table through 3 tasks at ANY cluster size, which at
-      // 100 TB is ~33 TB per task. GlobalWindow.groupedCumSum splits
-      // each group over sampled order-key ranges, sweeps (group, range)
-      // locally, and broadcast-joins G×P prefix offsets. Same oracle as
-      // order_cumsum: the rewrite must be exactly value-equal.
+      // 100 TB is ~33 TB per task. GlobalWindow.groupedCumSum
+      // range-partitions on (flag, order keys), so each group spreads
+      // over many partitions, and carries each partition's last group
+      // run into the next. Same oracle as order_cumsum: the rewrite must
+      // be exactly value-equal.
       graft.operators.GlobalWindow.groupedCumSum(
           t(s, dir, "lineitem"), by = Seq("l_returnflag"),
           orderBy = Seq(col("l_shipdate"), col("l_orderkey"),

@@ -339,7 +339,7 @@ object TextQueries {
       // stable global order and chunk the token stream into fixed
       // 8192-token budgets — each doc's sequence id is the budget bin
       // holding its START offset. The running offset uses
-      // GlobalWindow.cumSum (content-derived range pids, G×P-parallel),
+      // GlobalWindow.cumSum (a segmented scan over a range exchange),
       // NOT a single-partition Window.orderBy — packing a 100 TB corpus
       // is exactly the global-running-sum shape that operator exists for.
       val d = docs(s, dir).select(col("doc_id"),
@@ -494,7 +494,7 @@ object TextQueries {
       // Deterministic global training-order shuffle + shard assignment:
       // permutation rank over the seeded engine-stable unit hash, shard
       // = (rank-1) % 16. The global rank is GlobalWindow.cumSum of ones
-      // over the hash order — the G×P two-pass running sum, NOT a
+      // over the hash order — the range-partitioned running sum, NOT a
       // single-partition row_number() window (which would serialize the
       // whole corpus through one task; at 100 TB the shuffle-and-shard
       // step is exactly where naive pipelines bottleneck). Same

@@ -1738,8 +1738,9 @@ object TimeSeriesQueries {
       // GROUPED rolling uniques (per event_type — rolling actives per
       // source/domain/tenant): the same difference-array decomposition
       // with group keys riding every stage; the final running sum is
-      // GlobalWindow.groupedCumSum, so the few-hot-groups shape gets
-      // G×P parallelism instead of a G-task window cap.
+      // GlobalWindow.groupedCumSumsLong, whose range exchange on
+      // (group, day) spreads the few hot groups over many partitions
+      // instead of a G-task window cap.
       graft.operators.RollingDistinct.groupedTrailingDistinct(
         events(s, dir).select(col("event_type"), col("user_id"),
           expr("ts div 86400000000000").as("day")),
@@ -1944,7 +1945,7 @@ object TimeSeriesQueries {
       // the day axis is |days|-bounded (~2.5k rows at any sf), so the
       // single-partition lag window is a bounded-domain sweep, not a
       // scale hazard (the PlanAudit global_window rule's documented
-      // exception — same argument as GlobalWindow's offsets frame)
+      // exception)
       daily
         .withColumn("prev_c", lag(col("rev_c"), 1).over(w))
         .select(col("d").cast("string").as("day"), col("rev_c"),
@@ -2054,7 +2055,7 @@ object TimeSeriesQueries {
       // to ONE delta per day first (also what makes same-day
       // concurrency well-defined: everything starting on d counts for
       // everything else on d), then the GLOBAL running sum over the
-      // unique day axis rides GlobalWindow's two-pass G×P rewrite —
+      // unique day axis rides GlobalWindow's segmented scan —
       // never a single-partition window over the whole time axis. End
       // day is the order's last ship date, inclusive (−1 lands on
       // e+1). At 100 TB the sweep costs one hash agg over |days| +

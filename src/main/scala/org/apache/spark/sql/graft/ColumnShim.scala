@@ -50,25 +50,4 @@ object ColumnShim {
         else None
       case _ => None
     }
-
-  /** True when the column carries an explicit sort direction (`.asc`/
-    * `.desc`): its ColumnNode is the private[sql] internal.SortOrder, not
-    * a value expression, so it can't be used inside struct()/comparisons. */
-  def isSortOrder(c: Column): Boolean =
-    c.node.isInstanceOf[org.apache.spark.sql.internal.SortOrder]
-
-  /** Decompose an order key into (value column, ascending?, nullsFirst?):
-    * a `.asc/.desc[_nulls_*]` wrapper is unpacked to its child value
-    * expression plus its direction flags; a plain value column is
-    * (itself, asc, nulls-first) — `Window.orderBy`'s defaults. Lets
-    * operator code compile direction-aware comparisons from keys it
-    * cannot otherwise look inside (the SortOrder node is private[sql]). */
-  def sortSpec(c: Column): (Column, Boolean, Boolean) = c.node match {
-    case so: org.apache.spark.sql.internal.SortOrder =>
-      import org.apache.spark.sql.internal.{SortOrder => SO}
-      (new Column(so.child),
-        so.sortDirection == SO.Ascending,
-        so.nullOrdering == SO.NullsFirst)
-    case _ => (c, true, true)
-  }
 }

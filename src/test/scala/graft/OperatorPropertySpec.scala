@@ -208,9 +208,9 @@ class OperatorPropertySpec extends AnyFunSuite {
   }
 
   test("groupedCumSum equals a sequential per-group scan (nulls, dup keys)") {
-    // adversarial shapes for the content-pid path: duplicate order keys
-    // (bounds collapse), null values (count gating), few rows over many
-    // requested partitions (empty pids), 1-3 hot groups
+    // adversarial shapes for the range-partitioned scan: duplicate order
+    // keys (bounds collapse), null values (count gating), few rows over
+    // many partitions (empty ranges), 1-3 hot groups
     val rowGen: Gen[List[(Long, Long, Option[Double])]] = for {
       n <- Gen.choose(0, 40)
       rows <- Gen.listOfN(n, for {
@@ -224,11 +224,15 @@ class OperatorPropertySpec extends AnyFunSuite {
       val df = rows.zipWithIndex
         .map { case ((f, k, v), i) => (f, k, i.toLong, v) }
         .toDF("flag", "k", "rid", "v")
-      val got = graft.operators.GlobalWindow.groupedCumSum(df, Seq("flag"),
-          Seq($"k", $"rid"), "v", "cs", numPartitions = parts)
-        .select($"rid", $"cs").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-        .toMap
+      val got = SparkTestSession.withConf(
+          "spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+        graft.operators.GlobalWindow.groupedCumSum(df, Seq("flag"),
+            Seq($"k", $"rid"), "v", "cs")
+          .select($"rid", $"cs").collect()
+          .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+          .toMap
+      }
       val want = rows.zipWithIndex.map { case ((f, k, v), i) => (f, k, i.toLong, v) }
         .groupBy(_._1).flatMap { case (_, grp) =>
           var acc = 0.0; var seen = false

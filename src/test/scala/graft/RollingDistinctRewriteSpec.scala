@@ -1590,7 +1590,7 @@ class RollingDistinctRewriteSpec extends AnyFunSuite {
     val e = intercept[Exception] {
       graft.operators.RollingDistinct.groupedCumulativeDistinctSum(
         df, by = Nil, valueCol = "id", bucketCol = "b",
-        cntCol = "c", sumCol = "s").collect()
+        cntCol = "c", sumCol = Some("s")).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x =>
@@ -1598,4 +1598,37 @@ class RollingDistinctRewriteSpec extends AnyFunSuite {
     assert(msgs(e).exists(_.contains("sentinel")),
       s"got: ${msgs(e).mkString(" | ")}")
   }
+
+  test("cumulative COUNT(DISTINCT) carries no sum: 64-bit-sized ids in " +
+      "one bucket count to 2 under both null orderings, while " +
+      "SUM(DISTINCT) over the same rows still overflows loudly") {
+    Seq(("g", 1L, 9000000000000000000L), ("g", 1L, 8000000000000000000L))
+      .toDF("g", "b", "x").createOrReplaceTempView("rd_big_ids")
+    for (ord <- Seq("b", "b ASC NULLS LAST")) {
+      val got = spark.sql("SELECT count(DISTINCT x) OVER " +
+          s"(PARTITION BY g ORDER BY $ord) AS c FROM rd_big_ids")
+        .collect().map(_.getLong(0)).toSeq
+      assert(got == Seq(2L, 2L), ord)
+    }
+    val e = intercept[Exception] {
+      spark.sql("SELECT sum(DISTINCT x) OVER (PARTITION BY g ORDER BY b) " +
+        "AS s FROM rd_big_ids").collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x =>
+        Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    assert(msgs(e).exists(m => m.contains("ARITHMETIC_OVERFLOW") ||
+      m.contains("overflow")), msgs(e).mkString(" | "))
+  }
+
+  test("analyzing a distinct range window starts no Spark job") {
+    Seq(("g", 1L, 5L), ("g", 3L, 6L), ("h", 9L, 5L))
+      .toDF("g", "b", "x").createOrReplaceTempView("rd_no_jobs")
+    val jobs = SparkTestSession.jobsDuring {
+      spark.sql("SELECT g, b, count(DISTINCT x) OVER (ORDER BY b " +
+        "RANGE 6 PRECEDING) AS c FROM rd_no_jobs").queryExecution.analyzed
+    }
+    assert(jobs == 0, s"$jobs Spark jobs ran during analysis")
+  }
 }
+

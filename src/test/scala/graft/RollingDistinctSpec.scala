@@ -129,7 +129,7 @@ class RollingDistinctSpec extends AnyFunSuite {
       ("g", null, 5L), ("g", null, 5L), ("g", 10L, 5L), ("g", 10L, 7L),
       ("g", 12L, 7L), ("g", 13L, 9L)).toDF("g", "b", "v")
     val got = RollingDistinct.groupedCumulativeDistinctSum(df, Seq("g"),
-        "v", "b", "cnt", "sm")
+        "v", "b", "cnt", Some("sm"))
       .collect().map(r => (if (r.isNullAt(1)) None else Some(r.getLong(1)))
         -> ((r.getLong(2), r.getLong(3)))).toMap
     // sentinel (null bucket): ids among null rows only = {5}
