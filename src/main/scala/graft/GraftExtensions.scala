@@ -34,6 +34,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // expression before stock Spark rejects it.
     ext.injectResolutionRule(session =>
       graft.plans.RollingDistinctRewrite(session))
+    // bounded integral ROWS frames → the retracting SlidingWindowExec;
+    // every other Window node keeps WindowExec
+    ext.injectPlannerStrategy(_ =>
+      graft.operators.SlidingWindow.SlidingWindowStrategy)
   }
 }
 

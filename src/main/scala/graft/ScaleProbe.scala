@@ -559,152 +559,6 @@ object ScaleProbe {
       }
     }
 
-    // Sliding-frame retraction crossover (round 11): Spark's
-    // SlidingWindowFunctionFrame has no inverse, so a bounded rows
-    // frame re-aggregates all w rows per output row — O(w)/row. The
-    // running-sum-difference form (sₖ = rₖ − lag(rₖ, w)) is O(1)/row
-    // but pays a SECOND WindowExec pass. Measured verdicts that shaped
-    // the shipped keys: at w=20, 6 sliding long sums BEAT both
-    // retraction carriers (decimal sum_l128 2.90s vs sliding 1.46s at
-    // sf1; two-limb sumL128Parts 1.63s vs 1.46s), so
-    // window_rolling_corr/slope keep the sliding frame. This section
-    // pins WHERE retraction starts winning — the two-limb (hi,lo)
-    // carrier (needed because cents²-scale terms wrap an int64 RUNNING
-    // sum at ~7.6e4 rows/key; 2M-row partitions here genuinely exceed
-    // that) against the sliding form at w = 20 / 100 / 500 on the same
-    // 10k-key exchange. Bit-equality of all six frame sums is ASSERTED
-    // at every w, so the fast path is proven, not assumed.
-    {
-      import graft.functions.SumL128.{sumL128Parts, partsDiff}
-      val md = spark.range(n).select(col("id"),
-          pmod(xxhash64(col("id")), lit(1000)).as("k"),
-          (pmod(xxhash64(col("id"), lit(5)), lit(5000)) + 1).as("xc"),
-          (pmod(xxhash64(col("id"), lit(7)), lit(10000000)) + 1).as("yc"))
-        .repartition(32).localCheckpoint()
-      val wl = Window.partitionBy(col("k")).orderBy(col("id"))
-      val xc = col("xc"); val yc = col("yc")
-      for (wid <- Seq(20, 100, 500)) {
-        val ws = wl.rowsBetween(-(wid - 1), 0)
-        var slide: org.apache.spark.sql.DataFrame = null
-        time(f"retraction: sliding 6 sums w=$wid%-4d (${n / 1000000}M)") {
-          slide = md.select(col("id"),
-            count(lit(1)).over(ws).as("n"),
-            sum(xc).over(ws).as("sx"), sum(yc).over(ws).as("sy"),
-            sum(xc * yc).over(ws).as("sxy"),
-            sum(xc * xc).over(ws).as("sxx"),
-            sum(yc * yc).over(ws).as("syy"))
-          sink(slide)
-        }
-        var retr: org.apache.spark.sql.DataFrame = null
-        time(f"retraction: two-limb diff  w=$wid%-4d (same window)") {
-          val wRun =
-            wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val run = md.select(col("id"), col("k"),
-            count(lit(1)).over(wRun).as("rn"),
-            sumL128Parts(xc).over(wRun).as("rx"),
-            sumL128Parts(yc).over(wRun).as("ry"),
-            sumL128Parts(xc * yc).over(wRun).as("rxy"),
-            sumL128Parts(xc * xc).over(wRun).as("rxx"),
-            sumL128Parts(yc * yc).over(wRun).as("ryy"))
-          val lagged = run.select(col("id"),
-            col("rn"), col("rx"), col("ry"),
-            col("rxy"), col("rxx"), col("ryy"),
-            lag(col("rn"), wid, 0L).over(wl).as("ln"),
-            lag(col("rx"), wid).over(wl).as("lx"),
-            lag(col("ry"), wid).over(wl).as("ly"),
-            lag(col("rxy"), wid).over(wl).as("lxy"),
-            lag(col("rxx"), wid).over(wl).as("lxx"),
-            lag(col("ryy"), wid).over(wl).as("lyy"))
-          retr = lagged.select(col("id"),
-            (col("rn") - col("ln")).as("n"),
-            partsDiff(col("rx"), col("lx")).as("sx"),
-            partsDiff(col("ry"), col("ly")).as("sy"),
-            partsDiff(col("rxy"), col("lxy")).as("sxy"),
-            partsDiff(col("rxx"), col("lxx")).as("sxx"),
-            partsDiff(col("ryy"), col("lyy")).as("syy"))
-          sink(retr)
-        }
-        // exact-integer frame sums: == is fair; 1% deterministic sample
-        val cols = Seq("n", "sx", "sy", "sxy", "sxx", "syy")
-        val samp = slide.filter(pmod(xxhash64(col("id")), lit(100)) === 0)
-          .join(retr.filter(pmod(xxhash64(col("id")), lit(100)) === 0)
-            .select(col("id") +: cols.map(c => col(c).as(s"${c}2")): _*),
-            Seq("id"))
-        val diverged = samp.filter(
-          cols.map(c => col(c) =!= col(s"${c}2")).reduce(_ || _)).count()
-        require(diverged == 0,
-          s"two-limb retraction diverged from sliding sums at w=$wid " +
-            s"on $diverged sampled rows")
-        println(s"[probe]   w=$wid sliding vs retraction bit-equal " +
-          s"(diverged=$diverged)")
-      }
-    }
-
-    // van Herk block-extrema crossover (round 12): min/max have NO
-    // inverse, so the retraction rewrite above cannot apply to them —
-    // the wide-w alternative is the van Herk / Gil–Werman block
-    // decomposition (window_rolling_minmax_wide): prefix+suffix
-    // extrema over (key, block=w) plus one lag, O(1)/row at the cost
-    // of two extra sort-exchanges. Measured on the same 1000-key
-    // exchange at 10M rows: w=20 sliding 3.09s vs block 3.31s (the
-    // sliding frame KEEPS window_rolling_minmax); w=200 sliding 4.06s
-    // vs block 3.10s; w=500 sliding 8.49s vs block 5.23s — the
-    // crossover sits between w≈20 and w≈200, shallower than the sum
-    // family's (min/max sliding updates are single long compares, not
-    // multi-buffer re-aggregation). Bit-equality asserted at every w.
-    {
-      val md = spark.range(n).select(col("id"),
-          pmod(xxhash64(col("id")), lit(1000)).as("k"),
-          (pmod(xxhash64(col("id"), lit(5)), lit(5000)) + 1).as("xc"))
-        .repartition(32).localCheckpoint()
-      val wl = Window.partitionBy(col("k")).orderBy(col("id"))
-      for (wid <- Seq(20, 200, 500)) {
-        val ws = wl.rowsBetween(-(wid - 1), 0)
-        var slide: org.apache.spark.sql.DataFrame = null
-        time(f"vanherk: sliding min+max w=$wid%-4d") {
-          slide = md.select(col("id"),
-            min(col("xc")).over(ws).as("mn"),
-            max(col("xc")).over(ws).as("mx"))
-          sink(slide)
-        }
-        var blockf: org.apache.spark.sql.DataFrame = null
-        time(f"vanherk: block pre+suf w=$wid%-4d") {
-          val base = md.select(col("id"), col("k"), col("xc"),
-            ((row_number().over(wl) - 1) / wid).cast("int").as("blk"))
-          val wBlk =
-            Window.partitionBy(col("k"), col("blk")).orderBy(col("id"))
-          val pre =
-            wBlk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val suf =
-            wBlk.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-          val scanned = base.select(col("id"), col("k"),
-            min(col("xc")).over(pre).as("premin"),
-            max(col("xc")).over(pre).as("premax"),
-            min(col("xc")).over(suf).as("sufmin"),
-            max(col("xc")).over(suf).as("sufmax"))
-          val lagged = scanned.select(col("id"),
-            col("premin"), col("premax"),
-            lag(col("sufmin"), wid - 1).over(wl).as("sjmin"),
-            lag(col("sufmax"), wid - 1).over(wl).as("sjmax"))
-          blockf = lagged.select(col("id"),
-            least(col("sjmin"), col("premin")).as("mn"),
-            greatest(col("sjmax"), col("premax")).as("mx"))
-          sink(blockf)
-        }
-        val samp = slide.filter(pmod(xxhash64(col("id")), lit(100)) === 0)
-          .join(blockf.filter(pmod(xxhash64(col("id")), lit(100)) === 0)
-            .select(col("id"), col("mn").as("mn2"), col("mx").as("mx2")),
-            Seq("id"))
-        val diverged = samp.filter(
-          col("mn") =!= col("mn2") || col("mx") =!= col("mx2")).count()
-        require(diverged == 0,
-          s"van Herk block extrema diverged from sliding at w=$wid " +
-            s"on $diverged sampled rows")
-        println(s"[probe]   w=$wid sliding vs block bit-equal " +
-          s"(diverged=$diverged)")
-      }
-    }
-
     // Triangle counting: 1M-edge power-law-ish graph (vertex ids from
     // xxhash64 mod a zipf-ish split: 10k hub-heavy + 1M sparse tail).
     // The degree-ordered orientation is what keeps the wedge join

@@ -101,8 +101,8 @@ object Sf10Probe {
     // design; the 25-nation output domain must not
     key("graph_shortest_path_k", 1, None),
     // round-14 widening: the banded-LSH candidate pipeline (copy-local
-    // pairs — disjoint shingle spaces), the two-limb retraction
-    // carrier at w=200, and the second fixed-domain iterative graph
+    // pairs — disjoint shingle spaces), the w=200 trailing-stats
+    // key, and the second fixed-domain iterative graph
     // key (pagerank: 25 nations, volumes change values, domain fixed)
     key("dedup_minhash", 10,
       Some((df, maxDoc, _, _, _) => df.filter(col("doc_a") <= maxDoc))),

@@ -57,11 +57,11 @@ object Sf1Probe {
     "text_keyword_topk", "sample_balanced", "curate_dataset_report",
     // round-10: the prefix-filter scale sibling of graph_common_neighbors
     "graph_common_neighbors_ppjoin",
-    // round-11: the wide-w retraction key, the CUSUM window identity,
+    // round-11: the wide-w trailing-stats key, the CUSUM window identity,
     // and the heavy text/mm additions
     "window_rolling_std_wide", "ts_changepoint_cusum",
     "text_dedup_passages", "text_bigram_logprob", "mm_phash_dedup",
-    // round-12: the van Herk extrema key, the iterated BPE trainer,
+    // round-12: the wide-w extrema key, the iterated BPE trainer,
     // and the forced distributed-CC scale path
     "window_rolling_minmax_wide", "text_bpe_merge_rounds",
     "dedup_clusters_distributed", "graph_shortest_path_k",

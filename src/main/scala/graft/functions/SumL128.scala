@@ -2,11 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, BitwiseAnd, Cast, Coalesce, CreateNamedStruct, Expression, Literal, Multiply, ShiftRight}
+import org.apache.spark.sql.catalyst.expressions.{Add, AttributeReference, BitwiseAnd, Cast, Coalesce, Expression, Literal, Multiply, ShiftRight}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graft.ColumnShim
-import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, LongType}
 
 /** Exact 124-bit integer sum that never leaves the long fast path.
   *
@@ -93,130 +93,10 @@ case class SumL128Expr(child: Expression)
     copy(child = newChild)
 }
 
-/** [[SumL128Expr]] with the RAW two-long accumulator as the result —
-  * `struct<hi, lo>` with `lo ∈ [0, 2^62)` and the true sum
-  * `hi·2^62 + lo` — instead of the assembled DECIMAL(38,0).
-  *
-  * Why (round 11): the sliding-frame retraction rewrite (rolling_skew)
-  * needs RUNNING sums whose w-back difference reconstructs an exact
-  * bounded frame sum. With cents²-scale terms a plain long running sum
-  * wraps at ~7.6e4 rows/key, and the decimal form of [[SumL128Expr]]
-  * measured 2× SLOWER than the sliding re-aggregation it replaces
-  * (non-primitive decimal lag/subtract per row). This variant keeps
-  * everything in primitive longs end-to-end: the caller lags the
-  * struct (one offset read), and the difference
-  *   s = (hi − hi_lag)·2^62 + (lo − lo_lag)
-  * is exact AND overflow-free in int64 whenever the true frame sum
-  * satisfies |s| ≤ 2^63 − 2^62 (i.e. |s| ≤ 2^62): then dLo ∈ (−2^62,
-  * 2^62) forces hi − hi_lag ∈ [−1, 1] (s − dLo ∈ (−2^63, 2^63) and
-  * dHi = (s − dLo)/2^62 ∈ (−2, 2) is an integer) with
-  * (hi − hi_lag)·2^62 ∈ [−2^62, 2^62] — every intermediate
-  * representable, so the multiply cannot wrap (ANSI-safe). In the last margin 2^62 < |s| < 2^63 the
-  * reconstruction is still VALUE-correct but only via two's-complement
-  * wraparound (hi − hi_lag = ±2 makes the multiply hit ±2^63): non-ANSI
-  * arithmetic — under spark.sql.ansi.enabled=true that multiply throws.
-  * Callers must stay within |frame sum| ≤ 2^62 ≈ 4.6e18 for the
-  * ANSI-safe contract; current call sites (cents²-scale frame sums ≤
-  * ~2.4e16) are ~190× inside it. */
-case class SumL128PartsExpr(child: Expression)
-    extends DeclarativeAggregate
-    with UnaryLike[Expression] {
-
-  override def dataType: DataType =
-    StructType(Seq(StructField("hi", LongType, nullable = false),
-      StructField("lo", LongType, nullable = false)))
-  override def nullable: Boolean = false
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sum_l128_parts requires BIGINT input, got ${child.dataType.sql}; " +
-        "cast the argument explicitly")
-
-  private val Mask = (1L << 62) - 1
-
-  private lazy val lo =
-    AttributeReference("lo", LongType, nullable = false)()
-  private lazy val hi =
-    AttributeReference("hi", LongType, nullable = false)()
-
-  override lazy val aggBufferAttributes: Seq[AttributeReference] = Seq(lo, hi)
-  override lazy val initialValues: Seq[Expression] =
-    Seq(Literal(0L), Literal(0L))
-
-  override lazy val updateExpressions: Seq[Expression] = {
-    val v = Coalesce(Seq(child, Literal(0L)))
-    val s = Add(lo, v)
-    Seq(BitwiseAnd(s, Literal(Mask)),
-      Add(hi, ShiftRight(s, Literal(62))))
-  }
-
-  override lazy val mergeExpressions: Seq[Expression] = {
-    val s = Add(lo.left, lo.right)
-    Seq(BitwiseAnd(s, Literal(Mask)),
-      Add(Add(hi.left, hi.right), ShiftRight(s, Literal(62))))
-  }
-
-  override lazy val evaluateExpression: Expression =
-    CreateNamedStruct(Seq(
-      Literal("hi"), hi.asInstanceOf[Expression],
-      Literal("lo"), lo.asInstanceOf[Expression]))
-
-  override protected def withNewChildInternal(
-      newChild: Expression): SumL128PartsExpr = copy(child = newChild)
-}
-
 object SumL128 {
   /** Column form: `sumL128(c)` — c must already be LONG (the input
     * contract is the caller's: |v| ≤ 2^61). Result DECIMAL(38,0). */
   def sumL128(c: Column): Column =
     ColumnShim.column(
       SumL128Expr(ColumnShim.expression(c)).toAggregateExpression())
-
-  /** Column form of [[SumL128PartsExpr]]: `struct<hi, lo>` result. */
-  def sumL128Parts(c: Column): Column =
-    ColumnShim.column(
-      SumL128PartsExpr(ColumnShim.expression(c)).toAggregateExpression())
-
-  /** Exact difference of two [[sumL128Parts]] snapshots as a LONG —
-    * valid whenever the true difference fits int64 (the caller's frame
-    * bound). A null `prev` (e.g. a lag before the partition start)
-    * counts as zero. Overflow-free per the SumL128PartsExpr scaladoc. */
-  def partsDiff(cur: Column, prev: Column): Column =
-    if (checkEnabled) partsDiffChecked(cur, prev)
-    else {
-      import org.apache.spark.sql.functions.{coalesce, lit}
-      (cur.getField("hi") - coalesce(prev.getField("hi"), lit(0L))) *
-        lit(1L << 62) +
-        (cur.getField("lo") - coalesce(prev.getField("lo"), lit(0L)))
-    }
-
-  /** Debug-mode gate for [[partsDiffChecked]]: set the system property
-    * `graft.suml128.check=true` (JVM-wide, read per plan build) to make
-    * every partsDiff call site runtime-assert its ANSI-safe contract. */
-  def checkEnabled: Boolean =
-    java.lang.Boolean.getBoolean("graft.suml128.check")
-
-  /** [[partsDiff]] with the ANSI-safe contract ASSERTED per row
-    * (round-12 verdict item 9): raises before any wrapping multiply if
-    * |true frame sum| > 2^62. The check is itself overflow-free —
-    * dHi = hi − hi_lag is tested in [−1, 1] BEFORE the ·2^62 multiply
-    * (dHi outside that range already implies |s| > 2^62 given
-    * dLo ∈ (−2^62, 2^62), per the SumL128PartsExpr scaladoc proof),
-    * and only then is s assembled (|dHi| ≤ 1 makes every intermediate
-    * representable) and tested against the bound. CaseWhen evaluates
-    * branches lazily, so the multiply never executes on a violating
-    * row. ~3 extra comparisons/row — debug tier, not the hot path. */
-  def partsDiffChecked(cur: Column, prev: Column): Column = {
-    import org.apache.spark.sql.functions.{abs, coalesce, concat, lit,
-      raise_error, when}
-    val dHi = cur.getField("hi") - coalesce(prev.getField("hi"), lit(0L))
-    val dLo = cur.getField("lo") - coalesce(prev.getField("lo"), lit(0L))
-    val s = dHi * lit(1L << 62) + dLo
-    val bound = lit(1L << 62)
-    def boom(tagged: Column): Column = raise_error(concat(
-      lit("partsDiff contract violated: |frame sum| > 2^62 ("),
-      tagged.cast("string"), lit(")")))
-    when(abs(dHi) > lit(1L), boom(dHi))
-      .otherwise(when(abs(s) > bound, boom(s)).otherwise(s))
-  }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Round4
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`array<float>`) — north-star extension surface
@@ -234,7 +235,7 @@ object Similarity {
       }
       v.withColumn("cl", least(scores: _*).getField("j"))
     }
-    val r4 = (c: Column) => round(c + lit(1e-9), 4)
+    val r4 = (c: Column) => Round4.of(c + lit(1e-9))
     for (_ <- 1 to iters) {
       val means = assignDf(cents)
         .select(col("cl"), posexplode(col("vec")).as(Seq("d", "x")))

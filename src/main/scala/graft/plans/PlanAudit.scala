@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
+import graft.operators.SlidingWindow.SlidingWindowExec
 
 /** Scale-smell linter for physical plans — the PlanSpec discipline as a
   * user-facing library feature. A correct result off a bad plan is a
@@ -85,10 +86,9 @@ object PlanAudit {
                 "for a real table — check the broadcast side is O(1) " +
                 "rows", cls)
         case w: WindowExec if w.partitionSpec.isEmpty =>
-          all += Finding("global_window", Warn,
-            "window without partitionBy: the whole dataset sorts " +
-              "into ONE task; use GlobalWindow's segmented scan " +
-              "for global running aggregates", cls)
+          all += globalWindow(cls)
+        case w: SlidingWindowExec if w.partitionSpec.isEmpty =>
+          all += globalWindow(cls)
         case other =>
           val s = other.simpleStringWithNodeId()
           if (s.contains("UDF") && cls.contains("Project"))
@@ -104,6 +104,11 @@ object PlanAudit {
     walk(df.queryExecution.executedPlan)
     all.toSeq.filterNot(f => allow.contains(f.rule))
   }
+
+  private def globalWindow(cls: String) = Finding("global_window", Warn,
+    "window without partitionBy: the whole dataset sorts into ONE " +
+      "task; use GlobalWindow's segmented scan for global running " +
+      "aggregates", cls)
 
   /** True when a broadcast-side subtree is statically guaranteed tiny:
     * an ungrouped aggregate (exactly 1 output row) sits on a path of

@@ -141,6 +141,30 @@ object ExtendedQueries {
     }
   }
 
+  /** Rolling min/max/range of the price (exact long cents) per supplier
+    * over the trailing `w` rows. Integral min/max over a bounded ROWS
+    * frame plan SlidingWindowExec: a monotonic deque per aggregate,
+    * amortized O(1) per row at any `w`, where Spark's sliding frame
+    * re-scans the frame per output row. No float, no rounding contract.
+    */
+  private def rollingMinMax(s: SparkSession, dir: String, w: Int)
+      : DataFrame = {
+    val frame = Window.partitionBy(col("l_suppkey"))
+      .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
+        col("l_partkey"))
+      .rowsBetween(1 - w, 0)
+    val pc = floor(col("l_extendedprice") * 100 + 0.5).cast("long")
+    t(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_linenumber"),
+        col("l_partkey"), col("l_suppkey"),
+        min(pc).over(frame).as("roll_min_c"),
+        max(pc).over(frame).as("roll_max_c"))
+      .select(col("l_orderkey"), col("l_linenumber"),
+        col("l_partkey"), col("l_suppkey"),
+        col("roll_min_c"), col("roll_max_c"),
+        (col("roll_max_c") - col("roll_min_c")).as("roll_range_c"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "window_trailing_approx_distinct" -> ((s, dir) => {
       // The GROUPED approx/exact distinct-window pairing (round 17).
@@ -524,19 +548,10 @@ object ExtendedQueries {
       // identical expression tree = identical doubles — the
       // window_ewma literal-replay contract extended to moments.
       //
-      // WHY THIS KEEPS THE SLIDING FRAME while rolling_skew retracts
-      // (round-11 measured negative results, BOTH carriers): the cents²
-      // terms (≈1.2e14) wrap an int64 RUNNING sum at ~7.6e4 rows per
-      // supplier, so the running-sum-difference form needs a 128-bit
-      // carrier. Measured on the 6M-row sf1 fixture: sum_l128's
-      // DECIMAL(38,0) retraction 2.90s and the all-long two-limb
-      // sumL128Parts/partsDiff retraction 1.63s, vs sliding-long
-      // 1.46s — at w=20 six codegen long re-aggregations (~120 long
-      // adds/row) still beat the second WindowExec pass either carrier
-      // needs. ScaleProbe's retraction-crossover section measures the
-      // same six sums at w = 20/100/500 (bit-equality asserted) and
-      // pins where the two-limb form starts winning; see README for
-      // the recorded crossover.
+      // The six sums are bounded integral ROWS aggregates, so they
+      // plan SlidingWindowExec: each frame moves by retraction in O(1)
+      // per row, and each sum is bounded by the 20-row window (not by
+      // the supplier's history), so plain int64 carries them.
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"))
@@ -584,7 +599,8 @@ object ExtendedQueries {
       // r² squares AFTER the long→double cast (cxyc² would overflow
       // int64; the double square is the identical-expression contract,
       // not a fallback). Cents scale factors cancel in slope and r²;
-      // intercept carries the explicit /100 rescale.
+      // intercept carries the explicit /100 rescale. The window sums
+      // plan SlidingWindowExec, as in window_rolling_corr.
       val w = Window.partitionBy(col("l_partkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
           col("l_suppkey"))
@@ -652,56 +668,28 @@ object ExtendedQueries {
       // (A2³ ≤ 1e18 stays exact in int64), so both engines assemble
       // identical doubles from bit-identical integers — the
       // literal-replay contract at the third and fourth moment.
-      // SLIDING-FRAME RETRACTION (round 11, the steepest remaining
-      // Sf1Probe curve at 3.65×): Spark's SlidingWindowFunctionFrame
-      // has NO inverse/retract — a bounded rows-frame re-aggregates
-      // the whole w-row frame per output row (~w·5 buffer updates
-      // here). Because the sums are EXACT INTEGERS, the trailing sum
-      // decomposes as a running-sum difference instead:
-      //   s_k(i) = r_k(i) − r_k(i−w)   (r_k = running Σ, lag default 0)
-      // Running frames use UnboundedPrecedingWindowFunctionFrame
-      // (incremental, O(1)/row) and lag is an O(1) offset frame, so
-      // the plan is two chained WindowExecs on ONE exchange+sort (the
-      // second requires the same ordering the first preserves) at
-      // O(1)/row total — vs O(w)/row for the sliding form. Integer
-      // subtraction is exact, so s1..s4 are bit-identical to the
-      // direct frame sums and the oracle hash is unchanged. Overflow
-      // bound: the PER-PARTITION running Σq⁴ ≤ rows/key · 6.25e6 —
-      // int64-safe to ~1.5e12 rows per supplier (the sliding form's
-      // bound is w-local; this trick trades that for the partition
-      // bound, fine here and loudly documented for cents²-scale
-      // inputs where it would NOT be: rolling_corr/slope keep the
-      // sliding form because their running Σcents² caps at ~76k
-      // rows/key).
+      // The five frame sums are bounded integral ROWS aggregates, so
+      // they plan SlidingWindowExec: O(1) per row by retraction, and
+      // every sum is bounded by the 20-row window, not the partition.
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"))
-      val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        .rowsBetween(-19, 0)
       // quantity is integer-valued and positive: floor(q + 0.5) == round
       // exactly, without Round's per-row BigDecimal on doubles
       val q = floor(col("l_quantity") + 0.5).cast("long")
-      // THREE-STEP select: running sums land in named columns, then
-      // the lag differences land in named columns, then the assembly
-      // reads the columns. Catalyst does NOT common-subexpr window
-      // aggregates inside one projection — inlining n/s1..s4 into the
-      // a2/a3/a4 formulas instantiated 16 buffers (6×count, 10×sum)
-      // in one WindowExec where 5 suffice (measured 2× cost); the
-      // same rule means each lag must be referenced exactly once.
-      val run = t(s, dir, "lineitem")
+      // two-step select: the window sums land in named columns first —
+      // Catalyst does NOT common-subexpr window aggregates inside one
+      // projection, so inlining n/s1..s4 into the a2/a3/a4 formulas
+      // would instantiate 16 window buffers where 5 suffice
+      val sums = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("l_shipdate"),
-          count(lit(1)).over(wRun).as("rn"),
-          sum(q).over(wRun).as("r1"),
-          sum(q * q).over(wRun).as("r2"),
-          sum(q * q * q).over(wRun).as("r3"),
-          sum(q * q * q * q).over(wRun).as("r4"))
-      val sums = run.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"),
-        (col("rn") - lag(col("rn"), 20, 0L).over(w)).as("n"),
-        (col("r1") - lag(col("r1"), 20, 0L).over(w)).as("s1"),
-        (col("r2") - lag(col("r2"), 20, 0L).over(w)).as("s2"),
-        (col("r3") - lag(col("r3"), 20, 0L).over(w)).as("s3"),
-        (col("r4") - lag(col("r4"), 20, 0L).over(w)).as("s4"))
+          col("l_partkey"), col("l_suppkey"),
+          count(lit(1)).over(w).as("n"),
+          sum(q).over(w).as("s1"),
+          sum(q * q).over(w).as("s2"),
+          sum(q * q * q).over(w).as("s3"),
+          sum(q * q * q * q).over(w).as("s4"))
       val n = col("n"); val s1 = col("s1"); val s2 = col("s2")
       val s3 = col("s3"); val s4 = col("s4")
       val a2 = n * s2 - s1 * s1
@@ -717,45 +705,25 @@ object ExtendedQueries {
     }),
     "window_rolling_std_wide" -> ((s, dir) => {
       // WIDE trailing statistics — trailing 200-row mean/variance of
-      // price per supplier, the production use of the two-limb
-      // retraction carrier. At w=200 the sliding frame is 10× past the
-      // measured crossover (ScaleProbe: w=100 sliding 4.5s vs
-      // retraction 1.7s, w=500 21.0s vs 2.0s), so this key MUST
-      // retract — and unlike rolling_skew's quantity sums, the cents²
-      // terms (≤1.2e14) wrap a plain int64 RUNNING sum at ~7.6e4 rows
-      // per supplier, a bound a 100-TB supplier history exceeds. The
-      // sumL128Parts running sums are exact to 2^123 (unbounded for
-      // physical data) in primitive longs, the struct lag is one
-      // offset read, and partsDiff reconstructs the exact frame sum in
-      // int64 (frame bound 200·1.2e14 ≈ 2.4e16; see SumL128PartsExpr
-      // for the wrap-freedom proof). Assembly is the corr contract:
+      // price per supplier. n, Σv and Σv² over the 200-row frame are
+      // bounded integral ROWS sums, so they plan SlidingWindowExec
+      // (O(1) per row by retraction). The
+      // cents² sum is bounded by the window, not the partition:
+      // 200·1.2e14 ≈ 2.4e16 < 2^63. Assembly is the corr contract:
       // exact integer cancellation n·Σv²−(Σv)² (≤ 4.8e18, fits), ONE
       // closed-form double expression shared with the oracle. The
       // fixture slides genuinely: ~600 rows per supplier at sf0.1/sf1.
-      import graft.functions.SumL128.{sumL128Parts, partsDiff}
       val w = Window.partitionBy(col("l_suppkey"))
         .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"))
-      val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        .rowsBetween(-199, 0)
       val pc = floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-      // named-column discipline at each WindowExec (the buffer-CSE rule)
-      val run = t(s, dir, "lineitem")
+      val sums = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("l_shipdate"),
-          count(lit(1)).over(wRun).as("rn"),
-          sumL128Parts(pc).over(wRun).as("rv"),
-          sumL128Parts(pc * pc).over(wRun).as("rvv"))
-      val lagged = run.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"),
-        col("rn"), col("rv"), col("rvv"),
-        lag(col("rn"), 200, 0L).over(w).as("ln"),
-        lag(col("rv"), 200).over(w).as("lv"),
-        lag(col("rvv"), 200).over(w).as("lvv"))
-      val sums = lagged.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"),
-        (col("rn") - col("ln")).as("n"),
-        partsDiff(col("rv"), col("lv")).as("sv"),
-        partsDiff(col("rvv"), col("lvv")).as("svv"))
+          col("l_partkey"), col("l_suppkey"),
+          count(lit(1)).over(w).as("n"),
+          sum(pc).over(w).as("sv"),
+          sum(pc * pc).over(w).as("svv"))
       val n = col("n"); val nd = col("n").cast("double")
       val m2c = n * col("svv") - col("sv") * col("sv")
       // stddev, not variance: the variance's magnitude (~8.5e8 for
@@ -774,30 +742,7 @@ object ExtendedQueries {
     "window_rolling_minmax" -> ((s, dir) => {
       // Trailing extrema — rolling min/max/range of price per supplier
       // (w=20), completing the rolling family's order-statistic end.
-      // The sliding frame is the RIGHT plan at this w: min/max buffer
-      // updates are single codegen long compares (~40 ops/row for all
-      // three outputs), far below the second-WindowExec cost of any
-      // retraction (min has no inverse anyway — the wide-w path is the
-      // van Herk block decomposition, BUILT as the sibling key
-      // window_rolling_minmax_wide; ScaleProbe measures the crossover
-      // between w≈20, where this sliding frame wins 3.09s vs 3.31s,
-      // and w≈200, where the block form wins 3.10s vs 4.06s). Values
-      // pass through as exact long cents — no float, no rounding
-      // contract.
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"))
-        .rowsBetween(-19, 0)
-      val pc = floor(col("l_extendedprice") * 100 + 0.5).cast("long")
-      val sums = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"),
-          min(pc).over(w).as("roll_min_c"),
-          max(pc).over(w).as("roll_max_c"))
-      sums.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"),
-        col("roll_min_c"), col("roll_max_c"),
-        (col("roll_max_c") - col("roll_min_c")).as("roll_range_c"))
+      rollingMinMax(s, dir, 20)
     }),
     "window_linear_decay" -> ((s, dir) => {
       // LINEARLY time-decayed trailing sum — the recency-weighted
@@ -833,59 +778,9 @@ object ExtendedQueries {
           col("s0").as("win_sum_c"))
     }),
     "window_rolling_minmax_wide" -> ((s, dir) => {
-      // WIDE trailing extrema (w=200) — the van Herk / Gil–Werman
-      // block decomposition, the declared scale path from
-      // window_rolling_minmax: min/max have NO inverse, so the
-      // running-sum-difference rewrite (std_wide's partsDiff) cannot
-      // apply, and Spark's sliding frame re-aggregates O(w) per row
-      // (w=200 → 400 long compares/row for min+max). Blocks of exactly
-      // w rows per key: prefix extrema within block (running frame),
-      // suffix extrema within block (reverse running frame — SAME
-      // WindowExec, same sort), then any w-row trailing window
-      // [i−w+1, i] spans at most two blocks and its extremum is
-      //   min(suffix-min at j = i−w+1, prefix-min at i)
-      // — O(1) per row regardless of w. When the window aligns with a
-      // block (j at block start) both terms equal the block extremum;
-      // partition-head growing windows (j < 0) fall out of the lag's
-      // null: the window is then a block-0 prefix and the prefix
-      // extremum alone is exact (least/greatest skip nulls). Cost
-      // shape: THREE sort-exchanges (key → key+block → key) and O(1)
-      // per row, versus the sliding frame's ONE exchange and O(w) per
-      // row — ScaleProbe measures the crossover (see README); at
-      // w=200 the block form wins, at w=20 window_rolling_minmax's
-      // sliding frame remains the right plan. All long cents — no
-      // float, no rounding contract.
-      val W = 200
-      val ord = Seq(col("l_shipdate"), col("l_orderkey"),
-        col("l_linenumber"), col("l_partkey"))
-      val wKey = Window.partitionBy(col("l_suppkey")).orderBy(ord: _*)
-      val base = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("l_shipdate"),
-          floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("pc"))
-        .select(col("*"),
-          ((row_number().over(wKey) - 1) / W).cast("int").as("blk"))
-      val wBlk = Window
-        .partitionBy(col("l_suppkey"), col("blk")).orderBy(ord: _*)
-      val pre = wBlk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val suf = wBlk.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val scanned = base.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"), col("l_shipdate"),
-        min(col("pc")).over(pre).as("premin"),
-        max(col("pc")).over(pre).as("premax"),
-        min(col("pc")).over(suf).as("sufmin"),
-        max(col("pc")).over(suf).as("sufmax"))
-      val lagged = scanned.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"),
-        col("premin"), col("premax"),
-        lag(col("sufmin"), W - 1).over(wKey).as("sjmin"),
-        lag(col("sufmax"), W - 1).over(wKey).as("sjmax"))
-      lagged.select(col("l_orderkey"), col("l_linenumber"),
-        col("l_partkey"), col("l_suppkey"),
-        least(col("sjmin"), col("premin")).as("roll_min_c"),
-        greatest(col("sjmax"), col("premax")).as("roll_max_c"),
-        (greatest(col("sjmax"), col("premax")) -
-          least(col("sjmin"), col("premin"))).as("roll_range_c"))
+      // WIDE trailing extrema — window_rolling_minmax at ten times the
+      // frame (w=200).
+      rollingMinMax(s, dir, 200)
     }),
     "window_rolling_median" -> ((s, dir) => {
       // Rolling EXACT order statistics, trailing 7-row median and p75
@@ -1653,10 +1548,9 @@ object ExtendedQueries {
          FROM daily a JOIN daily b ON a.l_suppkey = b.l_suppkey
            AND b.day BETWEEN a.day - 6 AND a.day
          GROUP BY 1, 2""",
-    // oracle states the SEMANTICS directly (a plain 200-row trailing
-    // frame — DuckDB's windowed min/max runs on a segment tree, no
-    // O(w) concern there); the Spark side is the van Herk block
-    // decomposition whose equivalence the gate proves
+    // a plain 200-row trailing frame on both sides (DuckDB's windowed
+    // min/max runs on a segment tree, Spark's on SlidingWindowExec's
+    // monotonic deque)
     "window_rolling_minmax_wide" ->
       """WITH d AS (SELECT l_orderkey, l_linenumber, l_partkey,
            l_suppkey, l_shipdate,

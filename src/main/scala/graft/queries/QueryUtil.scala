@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Round4
 
 /** The ONE definition of the helpers every query module shares. The
   * DuckDB-oracle parity scheme depends on these being identical across
@@ -107,8 +108,10 @@ private[graft] object QueryUtil {
     * fail the gate. IEEE `-0.0 + 0.0 = +0.0` (and `x + 0.0 = x` for every
     * other double, NULL stays NULL), so adding 0.0 AFTER rounding on BOTH
     * sides ([[negZeroSafeOracle]] rewrites the oracle template) erases the
-    * sign-of-zero dimension for every r4'd column at once. */
-  def r4(c: Column): Column = round(c + lit(1e-9), 4) + lit(0.0)
+    * sign-of-zero dimension for every r4'd column at once. The rounding
+    * itself is [[Round4]]: Spark's `round(x, 4)` bit for bit, without
+    * its per-row BigDecimal. */
+  def r4(c: Column): Column = Round4.of(c + lit(1e-9)) + lit(0.0)
 
   /** Rewrite every `round(1e-9 …, 4)` template occurrence in an oracle SQL
     * string to `(round(1e-9 …, 4) + 0.0)` — the DuckDB side of the

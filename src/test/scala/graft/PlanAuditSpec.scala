@@ -36,6 +36,16 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(f.exists(_.rule == "global_window"), f.toString)
   }
 
+  test("flags an unpartitioned sliding window as Warn") {
+    val df = spark.range(100).toDF("id")
+      .select(col("id"), sum(col("id")).over(
+        Window.orderBy("id").rowsBetween(-3, 0)).as("s"))
+    assert(df.queryExecution.executedPlan.toString
+      .contains("SlidingWindow"), df.queryExecution.executedPlan.toString)
+    val f = PlanAudit.audit(df)
+    assert(f.exists(_.rule == "global_window"), f.toString)
+  }
+
   test("a partitioned window raises no global_window finding") {
     val df = spark.range(100)
       .select(col("id"), pmod(col("id"), lit(7)).as("k"))

@@ -92,75 +92,4 @@ class SumL128Spec extends AnyFunSuite {
     assert(e.getMessage.contains("sum_l128") ||
       e.getMessage.toLowerCase.contains("bigint"))
   }
-
-  test("parts: struct<hi,lo> carrier reassembles to the exact BigInt sum") {
-    import graft.functions.SumL128.sumL128Parts
-    val rnd = new scala.util.Random(7)
-    val vs: Seq[java.lang.Long] = Seq.fill(4000)(
-      java.lang.Long.valueOf(
-        (rnd.nextLong() % (1L << 61)) * (if (rnd.nextBoolean()) 1 else -1)))
-    val r = vs.toDF("v").repartition(8)
-      .agg(sumL128Parts(col("v")).as("s"))
-      .select(col("s.hi"), col("s.lo")).head
-    val got = BigInt(r.getLong(0)) * BigInt(2).pow(62) + BigInt(r.getLong(1))
-    assert(got == exact(vs))
-    assert(r.getLong(1) >= 0 && r.getLong(1) < (1L << 62),
-      "lo limb must stay the canonical [0, 2^62) digit")
-  }
-
-  test("partsDiff: windowed running difference equals the exact frame sum") {
-    import graft.functions.SumL128.{sumL128Parts, partsDiff}
-    import org.apache.spark.sql.expressions.Window
-    // terms at cents² scale (~1.2e14): a plain long RUNNING sum of
-    // 200k rows would wrap (caps at ~7.6e4); the two-limb carrier must
-    // still reconstruct every trailing-20 frame sum exactly
-    val n = 200000
-    val df = spark.range(n).select(col("id"),
-      (pmod(xxhash64(col("id")), lit(10000000L)) + 1L).as("v"))
-    val wl = Window.orderBy(col("id"))
-    val wRun = wl.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ws = wl.rowsBetween(-19, 0)
-    val both = df
-      .select(col("id"), col("v"),
-        sumL128Parts(col("v") * col("v")).over(wRun).as("r"),
-        sum(col("v") * col("v")).over(ws).as("frame"))
-      .select(col("id"), col("frame"),
-        partsDiff(col("r"), lag(col("r"), 20).over(wl)).as("diff"))
-    assert(both.filter(col("frame") =!= col("diff")).count() == 0)
-  }
-
-  test("partsDiffChecked: exact at ±2^62, raises one past it and on dHi overflow") {
-    import graft.functions.SumL128.partsDiffChecked
-    def diffOf(curHi: Long, curLo: Long, prevHi: Long, prevLo: Long): Long =
-      Seq((curHi, curLo, prevHi, prevLo)).toDF("ch", "cl", "ph", "pl")
-        .select(partsDiffChecked(
-          struct(col("ch").as("hi"), col("cl").as("lo")),
-          struct(col("ph").as("hi"), col("pl").as("lo"))).as("d"))
-        .head.getLong(0)
-    // boundary: |s| == 2^62 is still inside the ANSI-safe contract
-    assert(diffOf(1L, 0L, 0L, 0L) == (1L << 62))
-    assert(diffOf(0L, 0L, 1L, 0L) == -(1L << 62))
-    // one past the bound: |s| = 2^62 + 1 must raise, not wrap
-    val over = intercept[Exception] { diffOf(1L, 1L, 0L, 0L) }
-    assert(over.getMessage.contains("partsDiff contract"))
-    // dHi outside [-1, 1]: raises BEFORE the multiply could wrap
-    val hiOver = intercept[Exception] { diffOf(2L, 0L, 0L, 0L) }
-    assert(hiOver.getMessage.contains("partsDiff contract"))
-  }
-
-  test("partsDiff: debug property routes through the checked form") {
-    import graft.functions.SumL128
-    System.setProperty("graft.suml128.check", "true")
-    try {
-      assert(SumL128.checkEnabled)
-      val e = intercept[Exception] {
-        Seq((1L, 1L)).toDF("ch", "cl")
-          .select(SumL128.partsDiff(
-            struct(col("ch").as("hi"), col("cl").as("lo")),
-            struct(lit(0L).as("hi"), lit(0L).as("lo"))).as("d"))
-          .collect()
-      }
-      assert(e.getMessage.contains("partsDiff contract"))
-    } finally System.clearProperty("graft.suml128.check")
-  }
 }
